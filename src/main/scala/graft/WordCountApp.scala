@@ -41,13 +41,14 @@ object WordCountApp {
     counts.persist()
     counts.count() // force scan+map+merge so the Map timer is honest
     val mapDone = System.nanoTime()
-    FormattedTextSink.writeSingleFile(
-      counts.orderBy(col("word")), // O5
-      s"$outDir/output.txt", FormattedTextSink.HeaderAlpha)
-    FormattedTextSink.writeSingleFile(
-      counts.orderBy(col("cnt").desc, col("word").asc), // O6
-      s"$outDir/output2.txt", FormattedTextSink.HeaderFreq)
-    counts.unpersist()
+    try {
+      FormattedTextSink.writeSingleFile(
+        counts.orderBy(col("word")), // O5
+        s"$outDir/output.txt", FormattedTextSink.HeaderAlpha)
+      FormattedTextSink.writeSingleFile(
+        counts.orderBy(col("cnt").desc, col("word").asc), // O6
+        s"$outDir/output2.txt", FormattedTextSink.HeaderFreq)
+    } finally counts.unpersist()
     val t1 = System.nanoTime()
     println(s"Map time: ${(mapDone - t0) / 1000} us")
     println(s"Total time: ${(t1 - t0) / 1000} us")

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import graft.sources.{Formats, Tables}
 
@@ -42,6 +43,11 @@ class AppAndFormatsSpec extends SparkSpec {
         |lazy -> 1
         |quick -> 1
         |""".stripMargin)
+    // the sink's scratch part files are gone
+    val ls = Files.list(dir)
+    val names = try ls.iterator().asScala.map(_.getFileName.toString).toSet
+      finally ls.close()
+    assert(names == Set("input.txt", "output.txt", "output2.txt"))
   }
 
   test("non-ASCII end-to-end: product golden files + byte-exact delta pinned") {

@@ -2,9 +2,12 @@ package graft
 
 import graft.operators.WordCount
 import graft.sinks.FormattedTextSink
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end word-count pipeline on tiny in-memory fixtures and the
   * sf0.001 documents table. Goldens hand-computed per the reference
@@ -68,10 +71,117 @@ class WordCountSpec extends SparkSpec {
     FormattedTextSink.writeSingleFile(
       WordCount.byFrequency(fixture, col("text")), path,
       FormattedTextSink.HeaderFreq)
-    val lines = Files.readAllLines(java.nio.file.Paths.get(path))
+    val lines = Files.readAllLines(Paths.get(path))
     assert(lines.get(0) == "=== Final Word Counts (High → Low) ===")
     assert(lines.get(1) == "hello -> 3")
     assert(lines.size() == 13) // header + 12 distinct words
+  }
+
+  private def sinkBytes(path: Path): String =
+    new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
+
+  /** The file the sink must write: header, then each row as rendered by
+    * `collect()` on the driver. */
+  private def expected(sorted: DataFrame, header: String): String =
+    sorted.as[(String, Long)].collect()
+      .map { case (w, c) => s"$w -> $c\n" }.mkString(header + "\n", "", "")
+
+  /** Names in `dir` that only the sink's scratch write would leave. */
+  private def leftovers(dir: Path): Seq[String] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.map(_.getFileName.toString).filter(n =>
+      n.startsWith(".sink-") || n.startsWith("part-") || n.endsWith(".crc"))
+      .toVector
+    finally ls.close()
+  }
+
+  test("sink concatenates range partitions in order, empty ones included") {
+    // 64 words range-partitioned 16 ways, pinned, then the middle half
+    // dropped: the part files that remain have gaps in their numbers
+    val sorted = spark.range(0, 64, 1, 4)
+      .select(format_string("w%02d", col("id")).as("word"),
+        (col("id") % 5 + 1).as("cnt"))
+      .repartitionByRange(16, col("word")).sortWithinPartitions("word")
+      .localCheckpoint()
+      .filter(col("word") < "w16" || col("word") >= "w48")
+    val sizes = sorted.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length == 16 && sizes.count(_ == 0) >= 4 &&
+      sizes.count(_ > 0) >= 4)
+    val dir = Files.createTempDirectory("graft-sink-parts")
+    val path = dir.resolve("output.txt")
+    FormattedTextSink.writeSingleFile(sorted, path.toString,
+      FormattedTextSink.HeaderAlpha)
+    assert(sinkBytes(path) == expected(sorted, FormattedTextSink.HeaderAlpha))
+    assert(leftovers(dir).isEmpty)
+  }
+
+  test("sink: empty input writes the header only") {
+    val dir = Files.createTempDirectory("graft-sink-empty")
+    val path = dir.resolve("output.txt")
+    FormattedTextSink.writeSingleFile(
+      WordCount.alphabetical(fixture.filter(lit(false)), col("text")),
+      path.toString, FormattedTextSink.HeaderAlpha)
+    assert(sinkBytes(path) == FormattedTextSink.HeaderAlpha + "\n")
+    assert(leftovers(dir).isEmpty)
+  }
+
+  test("sink truncates a longer existing file") {
+    val dir = Files.createTempDirectory("graft-sink-over")
+    val path = dir.resolve("output.txt")
+    Files.writeString(path, "stale line\n" * 1000)
+    val sorted = WordCount.byFrequency(fixture, col("text"))
+    FormattedTextSink.writeSingleFile(sorted, path.toString,
+      FormattedTextSink.HeaderFreq)
+    assert(sinkBytes(path) == expected(sorted, FormattedTextSink.HeaderFreq))
+  }
+
+  test("sink writes to a relative path with no parent directory") {
+    val name = s"graft-sink-${java.util.UUID.randomUUID()}.txt"
+    assert(Paths.get(name).getParent == null)
+    val sorted = WordCount.alphabetical(fixture, col("text"))
+    try {
+      FormattedTextSink.writeSingleFile(sorted, name,
+        FormattedTextSink.HeaderAlpha)
+      assert(sinkBytes(Paths.get(name)) ==
+        expected(sorted, FormattedTextSink.HeaderAlpha))
+      assert(leftovers(Paths.get("").toAbsolutePath)
+        .forall(!_.startsWith(".sink-")))
+    } finally Files.deleteIfExists(Paths.get(name))
+  }
+
+  test("sink round-trips non-ASCII words as UTF-8") {
+    val dir = Files.createTempDirectory("graft-sink-utf8")
+    val path = dir.resolve("output.txt")
+    val sorted = WordCount.alphabetical(
+      Seq("sää on kaunis", "öljy ja åsna", "sää").toDF("text"), col("text"))
+    FormattedTextSink.writeSingleFile(sorted, path.toString,
+      FormattedTextSink.HeaderAlpha)
+    assert(sinkBytes(path) ==
+      """=== Final Word Counts (A → Z) ===
+        |ja -> 1
+        |kaunis -> 1
+        |on -> 1
+        |sää -> 2
+        |åsna -> 1
+        |öljy -> 1
+        |""".stripMargin)
+  }
+
+  test("sink leaves no scratch files when the query throws") {
+    val dir = Files.createTempDirectory("graft-sink-fail")
+    val path = dir.resolve("output.txt")
+    // the error is raised after the sort, inside the write tasks
+    val failing = spark.range(0, 100, 1, 4).orderBy("id").select(
+      when(col("id") === 57, raise_error(lit("boom")))
+        .otherwise(col("id").cast("string")).as("word"),
+      col("id").as("cnt"))
+    val e = intercept[Exception] {
+      FormattedTextSink.writeSingleFile(failing, path.toString,
+        FormattedTextSink.HeaderAlpha)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")))
+    assert(leftovers(dir).isEmpty)
   }
 
   test("sf0.001 documents: freq query nonempty, conserved total") {
