@@ -2860,7 +2860,8 @@ object SparkEntry {
 
   /** DuckDB oracle per query (same table names, same column aliases,
     * same total order). Test corpus is ASCII so `[^a-zA-Z]+` in DuckDB
-    * and `[^\p{L}]+` in Spark tokenize identically. */
+    * and Spark's letter-run tokenizer (`\p{L}` runs) tokenize
+    * identically. */
   def oracleSql: Map[String, String] = {
     val entries: Seq[(String, String)] = Seq(
     "q_wordcount_freq" ->

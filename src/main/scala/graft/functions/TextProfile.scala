@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Class rules mirror the regexes bit-for-bit (java.util.regex
   * semantics, which the DuckDB oracles agree with on this corpus):
-  *   - whitespace = `\s` = [ \t\n\f\r] (ASCII-only by default)
+  *   - whitespace = `\s` = [ \t\n\x0B\f\r] (ASCII-only by default)
   *   - letter     = `\p{L}`  = Character.isLetter
   *   - number     = `\p{N}`  = categories Nd, Nl, No
   *   - other      = anything else non-whitespace

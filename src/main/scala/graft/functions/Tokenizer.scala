@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.explode
+import org.apache.spark.sql.graft.ColumnBridge
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -20,15 +21,19 @@ import scala.collection.mutable.ArrayBuffer
   *     the reference walks `char`s. Because all bytes of a multi-byte
   *     UTF-8 sequence are >= 0x80, slices never split a code point, so
   *     outputs remain valid UTF-8. Exposed as a UDF for parity tests.
-  *   - [[tokensCol]]: the engine's product semantics — a codegen'd
-  *     regex split on `[^\p{L}]+` (non-letter code points). On ASCII
-  *     text the two agree exactly; they differ only on multi-byte
-  *     *non-letter* code points (e.g. `…`, `–`), which the reference
-  *     glues into words because their bytes are >= 0x80.
+  *   - [[tokensCol]]: the engine's product semantics — the codegen'd
+  *     byte-scan kernel [[LetterTokens]]: maximal runs of Unicode
+  *     letters (`\p{L}`), i.e. `split(line, DelimiterRegex)` with the
+  *     empty strings dropped. On ASCII text the two agree exactly; they
+  *     differ only on multi-byte *non-letter* code points (e.g. `…`,
+  *     `–`), which the reference glues into words because their bytes
+  *     are >= 0x80.
   */
 object Tokenizer {
 
-  /** Non-letter code points delimit; `\p{L}` = Unicode letter class. */
+  /** Non-letter code points delimit; `\p{L}` = Unicode letter class.
+    * The specification [[LetterTokens]] is tested against; no engine
+    * path runs this regex. */
   val DelimiterRegex = "[^\\p{L}]+"
 
   @inline private def isWordByte(b: Byte): Boolean = {
@@ -56,18 +61,18 @@ object Tokenizer {
     out.toSeq
   }
 
-  /** Regex fast path: line column -> array<string> of tokens (may contain
-    * one leading/trailing empty string when the line starts/ends with a
-    * delimiter — callers filter `length > 0` after explode). Codegen'd,
-    * no UDF in the hot path. */
-  def tokensCol(line: Column): Column = split(line, DelimiterRegex)
+  /** line column -> `array<string>` of its letter-run tokens, never an
+    * empty or null element (null line -> null). Codegen'd, no UDF in
+    * the hot path. */
+  def tokensCol(line: Column): Column =
+    ColumnBridge.column(LetterTokens(ColumnBridge.expression(line)))
 
-  /** line column -> one row per non-empty token. */
+  /** line column -> one row per token. */
   def explodeTokens(line: Column): Column = explode(tokensCol(line))
 
   /** Register the byte-exact tokenizer as a SQL-visible UDF
-    * `tokenize_bytes(string) -> array<string>` (parity path only; the
-    * regex path is preferred in product queries). */
+    * `tokenize_bytes(string) -> array<string>` (parity path only;
+    * product queries use [[tokensCol]]). */
   def registerUdfs(spark: SparkSession): Unit = {
     spark.udf.register("tokenize_bytes", (s: String) => tokenizeBytes(s))
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.graft.ColumnBridge
 /** The reference's entire pipeline (SURVEY.md §2 S1→T2→A3/X4→O5/O6/K7),
   * re-expressed declaratively so Catalyst plans it:
   *
-  *   scan → split+explode (GenerateExec) → partial HashAggregate →
+  *   scan → tokenize+explode (GenerateExec) → partial HashAggregate →
   *   shuffle(HashPartitioning(word)) → final HashAggregate →
   *   range-partitioned SortExec (for the sorted outputs) or
   *   TakeOrderedAndProject (for top-k).
@@ -21,11 +21,12 @@ import org.apache.spark.sql.graft.ColumnBridge
   */
 object WordCount {
 
-  /** One row per token from `text`, named `word`. Scan reads only the
-    * text column (column pruning reaches the parquet scan). */
+  /** One row per token from `text`, named `word` — the one definition
+    * of "the words of a text column" (the tokenizer never emits an
+    * empty token, so nothing is filtered). Scan reads only the text
+    * column (column pruning reaches the parquet scan). */
   def words(df: DataFrame, text: Column): DataFrame =
     df.select(Tokenizer.explodeTokens(text).as("word"))
-      .filter(length(col("word")) > 0)
 
   /** word -> cnt (A3 partial + X4 final aggregation). */
   def counts(df: DataFrame, text: Column): DataFrame =

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import graft.functions.Tokenizer
-import graft.operators.EventOps
+import graft.operators.{EventOps, WordCount}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -196,9 +195,7 @@ object EventStreams extends Serializable {
   def heavyHittersStream(lines: DataFrame, capacity: Int = 1024,
       textCol: String = "value"): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
-    lines
-      .select(Tokenizer.explodeTokens(col(textCol)).as("word"))
-      .filter(length(col("word")) > 0)
+    WordCount.words(lines, col(textCol))
       .agg(ColumnBridge.column(graft.functions.HeavyHitters(
         ColumnBridge.expression(col("word")), capacity)
         .toAggregateExpression()).as("top"))
@@ -210,11 +207,7 @@ object EventStreams extends Serializable {
     * exactly as the reference accumulates across its input batches
     * (reference: /root/reference/src/main.cpp:146-178 batch loop). */
   def wordCountStream(lines: DataFrame, textCol: String = "value"): DataFrame =
-    lines
-      .select(Tokenizer.explodeTokens(col(textCol)).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word")
-      .agg(count("*").as("cnt"))
+    WordCount.counts(lines, col(textCol))
 
   /** Streaming exact dedup with BOUNDED state: each key is remembered
     * only until the event-time watermark passes it, so state is
@@ -706,9 +699,7 @@ object EventStreams extends Serializable {
     // DESIGN and an oracle mismatch would point at the stream, not the
     // regime. The distinct count is one cheap aggregation at drain
     // (harness) scale.
-    val nDistinct = docs
-      .select(Tokenizer.explodeTokens(col("text")).as("word"))
-      .filter(length(col("word")) > 0)
+    val nDistinct = WordCount.words(docs, col("text"))
       .agg(countDistinct(col("word"))).head().getLong(0)
     require(nDistinct <= capacity,
       s"drainHeavyHitters: $nDistinct distinct words > capacity=" +

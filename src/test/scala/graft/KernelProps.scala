@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{HeavyHitters, TextProfile, Tokenizer}
+import graft.functions.{HeavyHitters, LetterTokens, TextProfile, Tokenizer}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -27,6 +27,63 @@ object KernelProps extends Properties("graft.kernels") {
     6 -> Gen.alphaNumChar.map(_.toString),
     2 -> Gen.oneOf(" ", "\t", "\n"),
     1 -> Gen.oneOf("😀", "🤖", "𝕏", "é"))).map(_.mkString)
+
+  // letters and non-letters the ASCII generators never reach: combining
+  // mark, Hebrew/Arabic/CJK letters, modifier and titlecase letters,
+  // a letter-number, the ellipsis, digits, astral letter and emoji
+  private val unicodeText: Gen[String] = Gen.listOf(Gen.frequency(
+    4 -> Gen.alphaChar.map(_.toString),
+    2 -> Gen.oneOf(" ", "\t", "-", "0", "7", ".", "\u000B"),
+    3 -> Gen.oneOf("\u0301", "\u05D0", "\u05E9", "\u0628", "\u0645",
+      "\u4E2D", "\u6587", "\u02B0", "\u01C5", "\u2160", "\u2026",
+      "\u00E9", "\u00AD", "\u0663", "\uD835\uDD4F", "\uD83D\uDE00")))
+    .map(_.mkString)
+  // byte strings, malformed UTF-8 included: random bytes, whole
+  // encodings of random code points, and truncated encodings
+  private val utf8ish: Gen[Array[Byte]] = {
+    val codePoint = Gen.frequency(
+      3 -> Gen.choose(0x80, 0xD7FF), 1 -> Gen.choose(0xE000, 0x10FFFF))
+    val enc = codePoint.map(cp => new String(Character.toChars(cp))
+      .getBytes("UTF-8"))
+    Gen.listOf(Gen.frequency(
+      3 -> Gen.choose(Byte.MinValue, Byte.MaxValue).map(Array(_)),
+      2 -> Gen.alphaChar.map(c => Array(c.toByte)),
+      2 -> enc,
+      1 -> enc.map(b => b.take(b.length - 1)))).map(_.toArray.flatten)
+  }
+
+  private def letterTokens(u: UTF8String): Seq[String] = {
+    val arr = LetterTokens.tokens(u)
+    (0 until arr.numElements()).map(arr.getUTF8String(_).toString)
+  }
+  private def regexTokens(s: String): Seq[String] =
+    s.split(Tokenizer.DelimiterRegex).filter(_.nonEmpty).toSeq
+
+  // ---- LetterTokens kernel vs the `[^\p{L}]+` split -------------------
+
+  property("LetterTokens == regex split (astral text)") = forAll(astralText) {
+    s => letterTokens(UTF8String.fromString(s)) == regexTokens(s)
+  }
+
+  property("LetterTokens == regex split (mixed text)") = forAll(mixedText) {
+    s => letterTokens(UTF8String.fromString(s)) == regexTokens(s)
+  }
+
+  property("LetterTokens == regex split (Unicode letters and marks)") =
+    forAll(unicodeText) { s =>
+      letterTokens(UTF8String.fromString(s)) == regexTokens(s)
+    }
+
+  property("LetterTokens == regex split of the decoded bytes") =
+    forAll(utf8ish) { b =>
+      val u = UTF8String.fromBytes(b)
+      letterTokens(u) == regexTokens(u.toString)
+    }
+
+  property("LetterTokens never emits an empty token") =
+    forAll(utf8ish) { b =>
+      letterTokens(UTF8String.fromBytes(b)).forall(_.nonEmpty)
+    }
 
   // ---- reference tokenizer (main.cpp byte semantics) -----------------
 

@@ -1,8 +1,14 @@
 package graft
 
+import graft.functions.LetterTokens
 import graft.operators.{Dedup, RelationalOps, Similarity, WordCount}
 import graft.sources.Tables.{documents, embeddings, table}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Explode
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the 100 TB posture, pinned.
@@ -39,6 +45,29 @@ class PlanSpec extends SparkSpec {
     // final agg above — i.e. two HashAggregates around one exchange
     assert(p.indexOf("HashAggregate", firstAgg + 1) >= 0,
       s"expected partial+final HashAggregate pair in:\n$p")
+  }
+
+  test("word count: one Generate over the letter kernel, no regex split, " +
+      "no Filter before the partial aggregate") {
+    val df = SparkEntry.queries("q_wordcount_freq")(spark, sfDir)
+    val p = plan(df)
+    assert(!p.contains("split("), s"regex split in:\n$p")
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case other => other
+    }
+    val gens = root.collect { case g: GenerateExec => g }
+    assert(gens.size == 1, s"expected one Generate in:\n$p")
+    assert(gens.head.generator match {
+      case e: Explode => e.child.isInstanceOf[LetterTokens]
+      case _ => false
+    }, s"Generate is not explode(graft_letter_tokens) in:\n$p")
+    val parent = root.find(_.children.exists(_ eq gens.head))
+    assert(parent.exists {
+      case h: HashAggregateExec =>
+        h.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }, s"Generate does not feed the partial HashAggregate in:\n$p")
   }
 
   test("dimension-chain join broadcasts, never shuffles the fact table") {
