@@ -1038,6 +1038,86 @@ object SparkEntry {
        |ORDER BY doc_id, pos""".stripMargin
   }
 
+  // ---- compacted stored-index builders. Each serves two rows of
+  // [[queries]]: its `_compact` row and the `_refresh` row with the
+  // same split and oracle. The base (%4 != 0) builds a segment list,
+  // the accepted ingest appends a segment, compaction folds the list
+  // back to one index, and the probe serves from it.
+
+  /** Exact fingerprints: the %8 = 4 ingest appended, the %8 = 0
+    * ingest probed. */
+  private val incrExactCompact: (SparkSession, String) => DataFrame =
+    (s, dir) => {
+      val docs = documents(s, dir)
+      val v1 = graft.sources.DedupIndexStore.writeExactSegmented(
+        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
+      val v2 = graft.sources.DedupIndexStore.appendExactSegment(v1,
+        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
+      val c = graft.sources.DedupIndexStore.compactExactSegments(s, v2)
+      graft.sources.DedupIndexStore.probeExact(s, c,
+        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
+        .select(col("doc_id"), col("lang"), col("source"), col("fp_md5"))
+    }
+
+  /** Minhash: same split; the compacted index carries the default
+    * cap, applied on the global membership. */
+  private val incrMinhashCompact: (SparkSession, String) => DataFrame =
+    (s, dir) => {
+      val docs = documents(s, dir)
+      val v2 = graft.sources.DedupIndexStore.appendMinhashSegment(
+        graft.sources.DedupIndexStore.writeMinhashSegmented(
+          docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)),
+        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
+      val c = graft.sources.DedupIndexStore.compactMinhashSegments(s, v2)
+      graft.sources.DedupIndexStore.probeMinhash(s, c,
+        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
+    }
+
+  /** Simhash: same split and cap rule as minhash. */
+  private val incrSimhashCompact: (SparkSession, String) => DataFrame =
+    (s, dir) => {
+      val docs = documents(s, dir)
+      val v2 = graft.sources.DedupIndexStore.appendSimhashSegment(
+        graft.sources.DedupIndexStore.writeSimhashSegmented(
+          docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)),
+        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
+      val c = graft.sources.DedupIndexStore.compactSimhashSegments(s, v2)
+      graft.sources.DedupIndexStore.probeSimhash(s, c,
+        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
+    }
+
+  /** Embedding SRP: the same split over vec_id, under the injected
+    * axis planes (the index's geometry, passed to every verb). */
+  private val incrEmbeddingCompact: (SparkSession, String) => DataFrame =
+    (s, dir) => {
+      val e = embeddings(s, dir)
+      val planes = Seq.tabulate(4)(t => Seq.tabulate(4)(j =>
+        Seq.tabulate(64)(i => if (i == 4 * t + j) 1.0 else 0.0)))
+      val v2 = graft.sources.DedupIndexStore.appendEmbeddingSegment(
+        graft.sources.DedupIndexStore.writeEmbeddingSegmented(
+          e.filter(pmod(col("vec_id"), lit(4)) =!= 0), planes),
+        e.filter(pmod(col("vec_id"), lit(8)) === 4), planes)
+      val c =
+        graft.sources.DedupIndexStore.compactEmbeddingSegments(s, v2)
+      graft.sources.DedupIndexStore.probeEmbedding(s, c,
+        e.filter(pmod(col("vec_id"), lit(8)) === 0),
+        threshold = 0.4, tables = planes)
+    }
+
+  /** Postings: the %4 = 0 quarter appended, the phrase served from
+    * the compacted pair. */
+  private val phraseSearchCompact: (SparkSession, String) => DataFrame =
+    (s, dir) => {
+      val docs = documents(s, dir)
+      val v1 = graft.sources.PostingsStore.writeSegmented(
+        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
+      val v2 = graft.sources.PostingsStore.appendSegment(v1,
+        docs.filter(pmod(col("doc_id"), lit(4)) === 0))
+      val c = graft.sources.PostingsStore.compactSegments(s, v2)
+      graft.sources.PostingsStore.phraseSearch(s, c,
+        phrase = Seq("window", "fast", "query"))
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1+T2+A3/X4+O6+tie-break: the reference's frequency output.
@@ -1605,32 +1685,22 @@ object SparkEntry {
         e.filter(pmod(col("vec_id"), lit(4)) === 0),
         threshold = 0.4, tables = planes)
     }),
-    // ---- stored-index REFRESH: the maintenance half of the index
+    // ---- stored-index MAINTENANCE: the other half of the index
     // lifecycle. Three generations: base (%4 != 0) builds the index,
-    // an accepted first ingest (%8 == 4) folds in via refresh*Index
-    // (id-level merge — the base corpus is never re-read), and the
-    // NEXT ingest (%8 == 0) probes the refreshed version. The oracle
-    // is the from-scratch cross-set relation over (base ∪ first
-    // ingest) vs the next ingest — refresh == rebuild in the uncapped
-    // regime (see refreshMinhashIndex's cap caveat).
-    "q_dedup_incr_exact_refresh" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val v1 = graft.sources.DedupIndexStore.writeExactIndex(
-        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-      val v2 = graft.sources.DedupIndexStore.refreshExactIndex(s, v1,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
-      graft.sources.DedupIndexStore.probeExact(s, v2,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
-        .select(col("doc_id"), col("lang"), col("source"), col("fp_md5"))
-    }),
+    // an accepted first ingest (%8 == 4) folds in, and the NEXT ingest
+    // (%8 == 0) probes the grown index. The oracle is the from-scratch
+    // cross-set relation over (base ∪ first ingest) vs the next
+    // ingest. Each `_refresh` row runs its `_compact` twin's builder
+    // (segment append + compaction) under the same oracle; the rows
+    // keep their names so the declared row set does not change.
+    "q_dedup_incr_exact_refresh" -> incrExactCompact,
     // The same maintenance fold in the SEGMENT regime (Lucene's model,
     // the PostingsStore lifecycle applied to the one cap-free dedup
     // index): the accepted %8 = 4 ingest hashes ONLY itself into an
     // appended segment — the base fp table never read or rewritten —
     // and the next ingest anti-joins the segment union (duplicate fps
     // across segments are anti-join-invisible, so no regroup at all).
-    // Same oracle as the id-merge refresh; one answer, two fold
-    // regimes.
+    // Same maintenance oracle; one answer, two fold regimes.
     "q_dedup_incr_exact_seg" -> ((s, dir) => {
       val docs = documents(s, dir)
       val v1 = graft.sources.DedupIndexStore.writeExactSegmented(
@@ -1642,51 +1712,17 @@ object SparkEntry {
         .select(col("doc_id"), col("lang"), col("source"), col("fp_md5"))
     }),
     // ... and the LSM third verb: the segment list compacts to one
-    // distinct-fp table (content == the id-merge refresh table,
-    // spec-pinned) and the probe serves from it. Same oracle.
-    "q_dedup_incr_exact_compact" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val v1 = graft.sources.DedupIndexStore.writeExactSegmented(
-        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-      val v2 = graft.sources.DedupIndexStore.appendExactSegment(v1,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
-      val c = graft.sources.DedupIndexStore.compactExactSegments(s, v2)
-      graft.sources.DedupIndexStore.probeExact(s, c,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
-        .select(col("doc_id"), col("lang"), col("source"), col("fp_md5"))
-    }),
-    "q_dedup_incr_minhash_refresh" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val v1 = graft.sources.DedupIndexStore.writeMinhashIndex(
-        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-      val v2 = graft.sources.DedupIndexStore.refreshMinhashIndex(s, v1,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
-      graft.sources.DedupIndexStore.probeMinhash(s, v2,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
-    }),
-    // The same three-generation maintenance fold for the SIMHASH
-    // index: base (%4 != 0) builds v1, the accepted %8 = 4 ingest
-    // folds in via refreshSimhashIndex (id-level merge — only the
-    // batch is fingerprinted, via the SimhashBits kernel), and the
-    // next %8 = 0 ingest probes v2. Oracle = the from-scratch
-    // cross-set Hamming join over the grown base (refresh == rebuild
-    // in the uncapped regime; see refreshMinhashIndex's cap caveat).
-    "q_dedup_incr_simhash_refresh" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val v1 = graft.sources.DedupIndexStore.writeSimhashIndex(
-        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-      val v2 = graft.sources.DedupIndexStore.refreshSimhashIndex(s, v1,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
-      graft.sources.DedupIndexStore.probeSimhash(s, v2,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
-    }),
+    // distinct-fp table (content == a from-scratch build, spec-pinned)
+    // and the probe serves from it. Same oracle.
+    "q_dedup_incr_exact_compact" -> incrExactCompact,
+    "q_dedup_incr_minhash_refresh" -> incrMinhashCompact,
+    "q_dedup_incr_simhash_refresh" -> incrSimhashCompact,
     // The SEGMENT regime for the two remaining banded families —
     // minhash and simhash follow the embedding face's probe-time
     // global cap (segments written uncapped, the skew-cap decision
     // recovered over the segment union at probe time), completing
     // the O(batch) ingest path for ALL FOUR dedup indexes. Same
-    // three-generation split; same maintenance oracles as the
-    // id-merge refreshes — one answer, two fold regimes.
+    // three-generation split; same maintenance oracles.
     "q_dedup_incr_minhash_seg" -> ((s, dir) => {
       val docs = documents(s, dir)
       val v1 = graft.sources.DedupIndexStore.writeMinhashSegmented(
@@ -1736,66 +1772,18 @@ object SparkEntry {
     // ... and the LSM third verb for all three banded families: the
     // segment list compacts to ONE capped single index (stored
     // bucket rows merged by regroup, global cap applied on full
-    // membership — EXACTLY a from-scratch build, no refresh caveat,
-    // corpus never re-read) and the probe serves from it. Same
-    // maintenance oracles: one answer, three fold regimes per family.
-    "q_dedup_incr_minhash_compact" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val v2 = graft.sources.DedupIndexStore.appendMinhashSegment(
-        graft.sources.DedupIndexStore.writeMinhashSegmented(
-          docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)),
-        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
-      val c = graft.sources.DedupIndexStore.compactMinhashSegments(s, v2)
-      graft.sources.DedupIndexStore.probeMinhash(s, c,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
-    }),
-    "q_dedup_incr_simhash_compact" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val v2 = graft.sources.DedupIndexStore.appendSimhashSegment(
-        graft.sources.DedupIndexStore.writeSimhashSegmented(
-          docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)),
-        docs.filter(pmod(col("doc_id"), lit(8)) === 4))
-      val c = graft.sources.DedupIndexStore.compactSimhashSegments(s, v2)
-      graft.sources.DedupIndexStore.probeSimhash(s, c,
-        docs.filter(pmod(col("doc_id"), lit(8)) === 0))
-    }),
-    "q_dedup_incr_embedding_compact" -> ((s, dir) => {
-      val e = embeddings(s, dir)
-      val planes = Seq.tabulate(4)(t => Seq.tabulate(4)(j =>
-        Seq.tabulate(64)(i => if (i == 4 * t + j) 1.0 else 0.0)))
-      val v2 = graft.sources.DedupIndexStore.appendEmbeddingSegment(
-        graft.sources.DedupIndexStore.writeEmbeddingSegmented(
-          e.filter(pmod(col("vec_id"), lit(4)) =!= 0), planes),
-        e.filter(pmod(col("vec_id"), lit(8)) === 4), planes)
-      val c =
-        graft.sources.DedupIndexStore.compactEmbeddingSegments(s, v2)
-      graft.sources.DedupIndexStore.probeEmbedding(s, c,
-        e.filter(pmod(col("vec_id"), lit(8)) === 0),
-        threshold = 0.4, tables = planes)
-    }),
-    // ... and for the EMBEDDING SRP index. The injected axis planes
-    // are the index's geometry, so the refresh passes the SAME
-    // tables (their digest is part of the registry key — a refresh
-    // under different planes would be a different index).
-    "q_dedup_incr_embedding_refresh" -> ((s, dir) => {
-      val e = embeddings(s, dir)
-      val planes = Seq.tabulate(4)(t => Seq.tabulate(4)(j =>
-        Seq.tabulate(64)(i => if (i == 4 * t + j) 1.0 else 0.0)))
-      val v1 = graft.sources.DedupIndexStore.writeEmbeddingIndex(
-        e.filter(pmod(col("vec_id"), lit(4)) =!= 0), planes)
-      val v2 = graft.sources.DedupIndexStore.refreshEmbeddingIndex(s, v1,
-        e.filter(pmod(col("vec_id"), lit(8)) === 4), planes)
-      graft.sources.DedupIndexStore.probeEmbedding(s, v2,
-        e.filter(pmod(col("vec_id"), lit(8)) === 0),
-        threshold = 0.4, tables = planes)
-    }),
+    // membership — EXACTLY a from-scratch build, corpus never re-read)
+    // and the probe serves from it. Same maintenance oracles.
+    "q_dedup_incr_minhash_compact" -> incrMinhashCompact,
+    "q_dedup_incr_simhash_compact" -> incrSimhashCompact,
+    "q_dedup_incr_embedding_compact" -> incrEmbeddingCompact,
+    "q_dedup_incr_embedding_refresh" -> incrEmbeddingCompact,
     // The same maintenance fold in the SEGMENT regime — the first
     // BANDED family with an O(batch) segment path: segments are
     // written uncapped and the skew cap is applied GLOBALLY at probe
     // time over the segment union (bit-for-bit the single-build cap
     // decision, even when the cap binds — see
-    // DedupIndexStore.probeEmbeddingSeg). Same oracle as the
-    // id-merge refresh: one answer, two fold regimes.
+    // DedupIndexStore.probeEmbeddingSeg). Same maintenance oracle.
     "q_dedup_incr_embedding_seg" -> ((s, dir) => {
       val e = embeddings(s, dir)
       val planes = Seq.tabulate(4)(t => Seq.tabulate(4)(j =>
@@ -2320,35 +2308,27 @@ object SparkEntry {
         phrase = Seq("window", "fast", "query"))
     }),
     // The index MAINTENANCE face: v1 built from 3/4 of the corpus,
-    // the remaining quarter folds in via refreshPostings (id-level
-    // merge - the base text is never re-read, and refresh == rebuild
-    // exactly: nothing is capped out of a postings index), then the
-    // phrase serves from v2. base ∪ accepted = the whole corpus, so
-    // the oracle is q_phrase_search's verbatim.
-    "q_phrase_search_refresh" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val v1 = graft.sources.PostingsStore.writePostings(
-        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-      val v2 = graft.sources.PostingsStore.refreshPostings(s, v1,
-        docs.filter(pmod(col("doc_id"), lit(4)) === 0))
-      graft.sources.PostingsStore.phraseSearch(s, v2,
-        phrase = Seq("window", "fast", "query"))
-    }),
+    // the remaining quarter folds in, then the phrase serves from the
+    // grown index. base ∪ accepted = the whole corpus, so the oracle
+    // is q_phrase_search's verbatim. Runs q_phrase_search_compact's
+    // builder (compaction == rebuild exactly).
+    "q_phrase_search_refresh" -> phraseSearchCompact,
     // The maintenance loop DRAINED: the same base/delta split, but the
     // delta documents arrive as a STREAM and fold into the stored
-    // index per micro-batch (foreachBatch refreshPostings - versioned
-    // tables, base text never re-read); the final version serves the
-    // phrase. Fold order is chunking-independent and refresh ==
-    // rebuild, so the answer is q_phrase_search's verbatim.
+    // index per micro-batch; maxSegments = 1 compacts after every
+    // fold (the per-fold O(index) merge), and the final version
+    // serves the phrase. Fold order is chunking-independent and
+    // compaction == rebuild, so the answer is q_phrase_search's
+    // verbatim.
     "q_phrase_index_stream" -> ((s, dir) => {
       val docs = documents(s, dir)
-      graft.streaming.EventStreams.drainPostingsMaintenance(
+      graft.streaming.EventStreams.drainPostingsSegMaintenance(
         docs.filter(pmod(col("doc_id"), lit(4)) =!= 0),
         docs.filter(pmod(col("doc_id"), lit(4)) === 0),
-        phrase = Seq("window", "fast", "query"))
+        phrase = Seq("window", "fast", "query"), maxSegments = 1)
     }),
     // The O(BATCH) maintenance face (Lucene's segment model, the
-    // refresh regime a high-ingest deployment runs): the accepted
+    // fold a high-ingest deployment runs): the accepted
     // quarter tokenizes ONLY itself and lands as an APPENDED segment
     // pair — the base postings never read or rewritten — and the
     // phrase serves from the segment union, every segment's slot scan
@@ -2367,16 +2347,7 @@ object SparkEntry {
     // pass over the STORED segments, the corpus never re-tokenized —
     // and the phrase serves from the compacted table. Compaction ==
     // rebuild exactly, so the oracle is unchanged.
-    "q_phrase_search_compact" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val v1 = graft.sources.PostingsStore.writeSegmented(
-        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-      val v2 = graft.sources.PostingsStore.appendSegment(v1,
-        docs.filter(pmod(col("doc_id"), lit(4)) === 0))
-      val c = graft.sources.PostingsStore.compactSegments(s, v2)
-      graft.sources.PostingsStore.phraseSearch(s, c,
-        phrase = Seq("window", "fast", "query"))
-    }),
+    "q_phrase_search_compact" -> phraseSearchCompact,
     // BM25 over the segment list: the serve-time regroup must merge
     // df/tf/dl correctly ACROSS segments (a cross-segment doc_id
     // counts once in df) — the ranking face of the segment model.
@@ -2392,8 +2363,8 @@ object SparkEntry {
     }),
     // The segment maintenance loop DRAINED: delta documents arrive as
     // a stream and each micro-batch APPENDS a segment (O(batch) per
-    // fold — the production regime; q_phrase_index_stream's id-merge
-    // fold pays O(index) per batch), then the final segment list
+    // fold — the production regime; q_phrase_index_stream compacts
+    // every fold, O(index) per batch), then the final segment list
     // serves the phrase. Same oracle verbatim.
     "q_phrase_index_seg_stream" -> ((s, dir) => {
       val docs = documents(s, dir)
@@ -3521,8 +3492,8 @@ object SparkEntry {
     "q_dedup_incr_exact_stream" -> IncrExactOracle,
     // Stored-index probe: same oracle (the minhash_stored convention).
     "q_dedup_incr_exact_stored" -> IncrExactOracle,
-    // Refreshed-index probe: the NEXT ingest (%8 = 0) against the
-    // refreshed fingerprint set (base %4 != 0 plus the accepted %8 = 4
+    // Grown-index probe: the NEXT ingest (%8 = 0) against the grown
+    // fingerprint set (base %4 != 0 plus the accepted %8 = 4
     // ingest = everything with doc_id %8 != 0); plain integer split,
     // no plants — keep-first within the probing batch.
     "q_dedup_incr_exact_refresh" -> IncrExactMaintOracle,
@@ -3546,8 +3517,8 @@ object SparkEntry {
     // (bucketed parquet read back from disk) shares the same oracle —
     // storage changes the lineage, never the pairs.
     "q_dedup_incr_minhash_stored" -> IncrMinhashOracle,
-    // Refreshed-index probe: IncrMinhashOracle's cross-set Jaccard
-    // with the refreshed base side (doc_id % 8 != 0 = original base
+    // Grown-index probe: IncrMinhashOracle's cross-set Jaccard
+    // with the grown base side (doc_id % 8 != 0 = original base
     // plus the accepted %8 = 4 ingest) vs the next ingest (%8 = 0).
     "q_dedup_incr_minhash_refresh" -> IncrMinhashMaintOracle,
     // One answer, two fold regimes: the O(batch) segment append with
@@ -3617,7 +3588,7 @@ object SparkEntry {
     "q_dedup_incr_embedding_stream" -> IncrEmbeddingOracle,
     // Stored-index probe: same oracle (the minhash_stored convention).
     "q_dedup_incr_embedding_stored" -> IncrEmbeddingOracle,
-    // Refreshed-index probe: the grown base (vec_id %8 != 0 = original
+    // Grown-index probe: the grown base (vec_id %8 != 0 = original
     // base plus the accepted %8 = 4 ingest) vs the next %8 = 0 ingest,
     // same injected-plane candidate + exact-cosine arithmetic.
     "q_dedup_incr_embedding_refresh" -> IncrEmbeddingMaintOracle,
@@ -3721,8 +3692,8 @@ object SparkEntry {
     "q_dedup_incr_simhash_stream" -> IncrSimhashOracle,
     // Stored-index probe: same oracle (the minhash_stored convention).
     "q_dedup_incr_simhash_stored" -> IncrSimhashOracle,
-    // Refreshed-index probe: the grown base (doc_id %8 != 0) vs the
-    // next %8 = 0 ingest — refresh == rebuild in the uncapped regime.
+    // Grown-index probe: the grown base (doc_id %8 != 0) vs the
+    // next %8 = 0 ingest.
     "q_dedup_incr_simhash_refresh" -> IncrSimhashMaintOracle,
     // One answer, two fold regimes: the O(batch) segment append with
     // the probe-time global cap serves the same grown base.
@@ -5213,7 +5184,7 @@ object SparkEntry {
     // the oracle verbatim (the minhash_stored convention).
     "q_phrase_search_stored" -> PhraseSearchOracle,
     // the maintenance face covers the same corpus (base ∪ accepted),
-    // so the refresh probe shares the oracle verbatim too
+    // so the grown-index probe shares the oracle verbatim too
     "q_phrase_search_refresh" -> PhraseSearchOracle,
     // ... and so does the drained maintenance LOOP (delta documents
     // folding in as a stream, final index version serving the phrase)
@@ -6887,8 +6858,8 @@ object SparkEntry {
   /** Exact cross-set 3-gram-Jaccard oracle, parameterized by the
     * base/batch split predicates (the [[incrSimhashOracleFor]]
     * convention): the %4 instance serves q_dedup_incr_minhash and
-    * its stream/stored twins, the %8 instance the two maintenance
-    * regimes (id-merge refresh and the O(batch) segment append). */
+    * its stream/stored twins, the %8 instance the maintenance rows
+    * (segment append, compaction and the drained folds). */
   private def incrMinhashOracleFor(basePred: String,
       batchPred: String): String =
     raw"""WITH toks AS (
@@ -6926,7 +6897,7 @@ object SparkEntry {
     * parameterized by the batch/base split predicates (4-band
     * pigeonhole is exhaustive for hamming <= 3). The %4 instance
     * serves q_dedup_incr_simhash and its stream/stored twins; the %8
-    * instance serves the refreshed-index probe (grown base = doc_id
+    * instance serves the grown-index probes (grown base = doc_id
     * %8 != 0, next ingest = %8 = 0). */
   private def incrSimhashOracleFor(batchPred: String,
       basePred: String): String =
@@ -6958,7 +6929,7 @@ object SparkEntry {
   private val IncrSimhashOracle: String =
     incrSimhashOracleFor("q.doc_id % 4 = 0", "b.doc_id % 4 != 0")
 
-  /** Refreshed-index probe oracle: the grown base. */
+  /** Grown-index probe oracle: the grown base. */
   private val IncrSimhashMaintOracle: String =
     incrSimhashOracleFor("q.doc_id % 8 = 0", "b.doc_id % 8 != 0")
 
@@ -7000,14 +6971,15 @@ object SparkEntry {
   private val IncrEmbeddingOracle: String =
     incrEmbeddingOracleFor("q.vec_id % 4 = 0", "b.vec_id % 4 != 0")
 
-  /** Refreshed-index probe oracle: the grown base. */
+  /** Grown-index probe oracle: the grown base. */
   private val IncrEmbeddingMaintOracle: String =
     incrEmbeddingOracleFor("q.vec_id % 8 = 0", "b.vec_id % 8 != 0")
 
   /** Shared oracle for the exact-index MAINTENANCE faces —
-    * q_dedup_incr_exact_refresh (id-merge), q_dedup_incr_exact_seg
-    * (O(batch) segment append), q_dedup_incr_exact_compact (the
-    * compacted single table): all three serve the SAME fingerprint
+    * q_dedup_incr_exact_seg (O(batch) segment append),
+    * q_dedup_incr_exact_compact (the compacted single table) and
+    * q_dedup_incr_exact_refresh (the compact row's builder): all
+    * three serve the SAME fingerprint
     * set ((base %4 != 0) ∪ (%8 = 4) = everything with doc_id %8 != 0)
     * to the same %8 = 0 probing ingest; keep-first within the batch. */
   private val IncrExactMaintOracle: String =
@@ -7196,7 +7168,7 @@ object SparkEntry {
   /** Shared by q_phrase_search (window form), q_phrase_projected
     * (stream-safe projection form), q_phrase_search_stored (served
     * from the persisted postings index), q_phrase_search_refresh
-    * (served from a refreshed index covering the same corpus), and
+    * (served from a grown index covering the same corpus), and
     * q_phrase_index_stream (the maintenance loop drained — delta docs
     * fold in as a stream): one answer, five plans. */
   private val PhraseSearchOracle: String =

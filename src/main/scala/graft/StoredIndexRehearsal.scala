@@ -201,10 +201,9 @@ object StoredIndexRehearsal {
     // Text retrieval served from the stored positional index
     // (sources/PostingsStore): inline = corpus-scan operators, build =
     // one-time postings + doclens persist, stored = serve from the
-    // tables (identical rows), refresh = fold an accepted batch into a
-    // base index at O(index) cost (v1 build over the base is paid
-    // outside the timed arm — it is the same work "build" already
-    // measures).
+    // tables (identical rows); the v1 build over the base that the
+    // maintenance arms fold into is paid outside the timed arms (it is
+    // the same work "build" already measures).
     face("postings") {
       import graft.operators.CorpusOps
       import graft.sources.PostingsStore
@@ -225,29 +224,14 @@ object StoredIndexRehearsal {
       arm("postings", "stored_bm25") {
         PostingsStore.bm25Search(spark, need(idx, "build"), terms).count()
       }
+      // (the maint_stream arms below pass the same bucket count, so
+      // their internal base build is this registry entry, not a
+      // rebuild inside the timed window)
       lazy val v1 = PostingsStore.writePostings(base, buckets = buckets)
-      // (the maint_stream arm below passes the same bucket count, so
-      // its internal base build is this registry entry, not a rebuild
-      // inside the timed window)
-      arm("postings", "refresh") {
-        val v2 = PostingsStore.refreshPostings(spark, v1, batch,
-          buckets = buckets)
-        spark.table(v2.table).count()
-      }
-      // the drained maintenance LOOP (q_phrase_index_stream's shape):
-      // v1 reuses the registry hit from the refresh arm's base build,
-      // so this times the STREAM half - 3 foreachBatch refresh folds
-      // over the delta replay plus the final stored serve
-      arm("postings", "maint_stream") {
-        graft.streaming.EventStreams.drainPostingsMaintenance(
-          base, batch, phrase, buckets = buckets).count()
-      }
       // THE SEGMENT REGIME (q_phrase_search_seg's shape): the same
       // accepted quarter lands as an appended segment — tokenize the
-      // batch only, never touch the base pair. seg_append vs refresh
-      // is the O(batch) vs O(index) fold-cost comparison; at each
-      // decade the refresh arm grows with the corpus while the append
-      // arm grows with the batch alone.
+      // batch only, never touch the base pair; the arm grows with the
+      // batch alone.
       var v2s: PostingsStore.SegmentedPostings = null
       arm("postings", "seg_append") {
         v2s = PostingsStore.appendSegment(
@@ -274,25 +258,24 @@ object StoredIndexRehearsal {
         graft.streaming.EventStreams.drainPostingsSegMaintenance(
           base, batch, phrase, buckets = buckets).count()
       }
-      // FIXED-BATCH decade contrast — the honest O(batch)-vs-O(index)
-      // measurement: the quarter-split arms above grow batch AND base
-      // together, so both folds scale linearly and only their ratio
-      // differs. Here the mod is raised 10x per decade
+      // the same loop compacting after every fold
+      // (q_phrase_index_stream's shape): 3 appends, each followed by an
+      // O(index) compaction, + the final serve
+      arm("postings", "maint_stream") {
+        graft.streaming.EventStreams.drainPostingsSegMaintenance(
+          base, batch, phrase, buckets = buckets, maxSegments = 1).count()
+      }
+      // FIXED-BATCH decade contrast: the quarter-split arms above grow
+      // batch AND base together. Here the mod is raised 10x per decade
       // (SPARK_GRAFT_FIXED_BATCH_MOD = 4 / 40 / 400 / 4000) so the
-      // batch stays ~constant-size while the base grows: the id-merge
-      // refresh must grow ~linearly per decade (it rewrites the whole
-      // index) while the segment append stays FLAT (it tokenizes the
-      // batch alone). The v1 base builds are paid outside the arms.
+      // batch stays ~constant-size while the base grows: the segment
+      // append stays FLAT (it tokenizes the batch alone). The v1 base
+      // builds are paid outside the arms.
       val fbMod = sys.env.getOrElse("SPARK_GRAFT_FIXED_BATCH_MOD", "4")
         .toInt
       val fbBase = docs.filter(pmod(col("doc_id"), lit(fbMod)) =!= 0)
       val fbBatch = docs.filter(pmod(col("doc_id"), lit(fbMod)) === 0)
       lazy val v1fb = PostingsStore.writePostings(fbBase, buckets = buckets)
-      arm("postings", s"refresh_fixed_mod$fbMod") {
-        val v2 = PostingsStore.refreshPostings(spark, v1fb, fbBatch,
-          buckets = buckets)
-        spark.table(v2.table).count()
-      }
       arm("postings", s"seg_append_fixed_mod$fbMod") {
         val v2 = PostingsStore.appendSegment(
           PostingsStore.SegmentedPostings(Seq(v1fb)), fbBatch,
@@ -302,7 +285,7 @@ object StoredIndexRehearsal {
       // PROBE COST vs SEGMENT COUNT — the read-amplification curve
       // compaction exists to reset, measured on the 1/2/4/8/16
       // doubling ladder (r12 verdict item 5: the knee of this curve
-      // is the compactIfOver trigger threshold). The batch quarter
+      // is the count trigger's threshold). The batch quarter
       // lands as 15 sub-batch segments (16-segment list incl. base);
       // the phrase probes at every power of two, then compaction
       // folds the full list to one pair and the probe is re-timed.
@@ -436,8 +419,7 @@ object StoredIndexRehearsal {
     // codebooks) injected into both arms; inline re-assigns and
     // re-encodes the corpus per query batch, stored reads only the
     // probed cells' code files; refresh appends the batch quarter as
-    // a segment (O(batch) - contrast the postings/dedup O(index)
-    // merges).
+    // a segment (O(batch), like every other family's segment append).
     face("ivfpq") {
       import graft.operators.Similarity
       import graft.sources.AnnIndexStore

@@ -218,20 +218,12 @@ object CorpusOps {
     * the term-sliced query face (CSV positions, the scalar-column
     * oracle convention). */
   private[graft] def postingsRows(docs: DataFrame): DataFrame =
-    postingRowsFlat(docs)
-      .groupBy("term", "doc_id")
-      .agg(sort_array(collect_list(col("pos"))).as("positions"))
-
-  /** The pre-grouped (term, doc_id, pos) rows [[postingsRows]]
-    * aggregates — also the unit a stored-index REFRESH merges at
-    * ([[graft.sources.PostingsStore.refreshPostings]] explodes the
-    * stored lists back to this shape, unions the accepted batch's
-    * rows, and regroups — exactly a from-scratch build's grouping). */
-  private[graft] def postingRowsFlat(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), posexplode(wsTokens(col("text")))
         .as(Seq("pos", "term")))
       .select(col("term"), col("doc_id"), col("pos"))
+      .groupBy("term", "doc_id")
+      .agg(sort_array(collect_list(col("pos"))).as("positions"))
 
   /** Per-document token counts — the doclens side table persisted with
     * the postings index (BM25's dl and, aggregated, its corpus

@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * to hive partitioning because the probe side filters by literal
   * cell ids rather than joining on a key both sides shuffle to).
   *
-  * Build-once registry + exit sweep: the [[DedupIndexStore]]
-  * conventions (file-backed corpora keyed by inputFiles + plan +
-  * centroid digest; in-memory fixtures build uncached). */
+  * Build-once registry + exit sweep: [[DedupIndexStore]]'s own
+  * (file-backed corpora keyed by inputFiles + plan + model digest;
+  * in-memory fixtures build uncached). */
 object AnnIndexStore {
 
   /** `centroids` ride in the handle — they are the trained model
@@ -32,56 +32,19 @@ object AnnIndexStore {
   final case class IvfIndex(paths: Seq[String],
       centroids: Array[Array[Double]])
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val seq = new java.util.concurrent.atomic.AtomicInteger()
-  private val createdDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  locally {
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      createdDirs.forEach { d =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val ws = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-          val paths = try ws.iterator().asScala.toVector finally ws.close()
-          paths.sortBy(-_.getNameCount)
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch { case _: Throwable => () }
-      }))
-  }
+  private def vectors(embs: DataFrame): DataFrame =
+    embs.select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
 
-  private def md5(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(12)
+  private def centroidDigest(centroids: Array[Array[Double]]): String =
+    DedupIndexStore.md5(centroids.map(_.mkString(",")).mkString(";"))
 
   /** Persist the corpus's IVF cell assignment
     * ([[Similarity.ivfAssign]]) partitioned by cell. */
   def writeIvfIndex(embs: DataFrame,
-      centroids: Array[Array[Double]]): IvfIndex = {
-    val e = embs.select(col("vec_id"),
-      Vectors.toDoubleVec(col("embedding")).as("v"))
-    val cdigest = md5(centroids.map(_.mkString(",")).mkString(";"))
-    def write(dir: String): String = {
-      createdDirs.add(dir)
-      Similarity.ivfAssign(e, centroids)
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      dir
-    }
-    // same identity rule as DedupIndexStore: cache only fully
-    // file-backed corpora (in-memory rows are absent from the key)
-    val path = DedupIndexStore.identityKey(embs) match {
-      case None =>
-        write(java.nio.file.Files
-          .createTempDirectory(s"graft-ivf-tmp${seq.incrementAndGet()}")
-          .toString)
-      case Some(k) =>
-        built.computeIfAbsent(md5(k + "|" + cdigest),
-          h => write(java.nio.file.Files
-            .createTempDirectory(s"graft-ivf-$h").toString))
-    }
-    IvfIndex(Seq(path), centroids)
-  }
+      centroids: Array[Array[Double]]): IvfIndex =
+    IvfIndex(Seq(DedupIndexStore.cellPartitioned("ivf",
+      DedupIndexStore.identityKey(embs), centroidDigest(centroids))(
+      Similarity.ivfAssign(vectors(embs), centroids))), centroids)
 
   /** Fold newly accepted vectors into a stored IVF index — the
     * maintenance half of the ANN lifecycle, at O(batch) cost: the
@@ -94,29 +57,13 @@ object AnnIndexStore {
     * index reads the segment union with the same literal cell filter
     * pruning every segment. Probing the refreshed index equals the
     * inline operator over (base ∪ accepted) — spec-pinned. */
-  def refreshIvfIndex(idx: IvfIndex, accepted: DataFrame): IvfIndex = {
-    val e = accepted.select(col("vec_id"),
-      Vectors.toDoubleVec(col("embedding")).as("v"))
-    val cdigest = md5(idx.centroids.map(_.mkString(",")).mkString(";"))
-    def write(dir: String): String = {
-      createdDirs.add(dir)
-      Similarity.ivfAssign(e, idx.centroids)
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      dir
-    }
-    val seg = DedupIndexStore.identityKey(accepted) match {
-      case None =>
-        write(java.nio.file.Files
-          .createTempDirectory(s"graft-ivfr-tmp${seq.incrementAndGet()}")
-          .toString)
-      case Some(k) =>
-        built.computeIfAbsent(
-          md5(s"refresh|${idx.paths.mkString(",")}|$k|$cdigest"),
-          h => write(java.nio.file.Files
-            .createTempDirectory(s"graft-ivfr-$h").toString))
-    }
-    IvfIndex(idx.paths :+ seg, idx.centroids)
-  }
+  def refreshIvfIndex(idx: IvfIndex, accepted: DataFrame): IvfIndex =
+    IvfIndex(idx.paths :+ DedupIndexStore.cellPartitioned("ivf_r",
+      DedupIndexStore.identityKey(accepted)
+        .map(k => s"refresh|${idx.paths.mkString(",")}|$k"),
+      centroidDigest(idx.centroids))(
+      Similarity.ivfAssign(vectors(accepted), idx.centroids)),
+      idx.centroids)
 
   /** A persisted IVF-PQ index — the production FAISS composition
     * stored: (vec_id, cell, codes, vnorm) segments partitioned by
@@ -135,8 +82,9 @@ object AnnIndexStore {
 
   private def ivfPqDigest(centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]]): String =
-    md5(centroids.map(_.mkString(",")).mkString(";") + "#" +
-      codebooks.map(_.map(_.mkString(",")).mkString("|")).mkString(";"))
+    DedupIndexStore.md5(centroids.map(_.mkString(",")).mkString(";") +
+      "#" + codebooks.map(_.map(_.mkString(",")).mkString("|"))
+        .mkString(";"))
 
   /** Persist the corpus's IVF-PQ index: residual-encoded code segments
     * partitioned by cell + the raw vectors bucketed by vec_id. */
@@ -144,27 +92,12 @@ object AnnIndexStore {
       centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
       buckets: Int = 8): IvfPqIndex = {
-    val e = embs.select(col("vec_id"),
-      Vectors.toDoubleVec(col("embedding")).as("v"))
-    val digest = ivfPqDigest(centroids, codebooks)
-    def write(dir: String): String = {
-      createdDirs.add(dir)
-      Similarity.ivfPqIndexRows(e, centroids, codebooks)
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      dir
-    }
+    val e = vectors(embs)
     val key = DedupIndexStore.identityKey(embs)
-    val path = key match {
-      case None =>
-        write(java.nio.file.Files
-          .createTempDirectory(
-            s"graft-ivfpq-tmp${seq.incrementAndGet()}").toString)
-      case Some(k) =>
-        built.computeIfAbsent(md5(k + "|ivfpq|" + digest),
-          h => write(java.nio.file.Files
-            .createTempDirectory(s"graft-ivfpq-$h").toString))
-    }
-    IvfPqIndex(Seq(path),
+    IvfPqIndex(
+      Seq(DedupIndexStore.cellPartitioned("ivfpq", key,
+        ivfPqDigest(centroids, codebooks))(
+        Similarity.ivfPqIndexRows(e, centroids, codebooks))),
       // the raw vectors are MODEL-INDEPENDENT, so the digest stays
       // out of this key: retraining centroids/codebooks over the same
       // corpus reuses the (largest) rerank relation as-is
@@ -182,86 +115,60 @@ object AnnIndexStore {
     * rewritten. */
   def refreshIvfPqIndex(spark: SparkSession, idx: IvfPqIndex,
       accepted: DataFrame, buckets: Int = 8): IvfPqIndex = {
-    val e = accepted.select(col("vec_id"),
-      Vectors.toDoubleVec(col("embedding")).as("v"))
-    val digest = ivfPqDigest(idx.centroids, idx.codebooks)
-    def write(dir: String): String = {
-      createdDirs.add(dir)
-      Similarity.ivfPqIndexRows(e, idx.centroids, idx.codebooks)
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      dir
-    }
+    val e = vectors(accepted)
     val key = DedupIndexStore.identityKey(accepted)
-    val seg = key match {
-      case None =>
-        write(java.nio.file.Files
-          .createTempDirectory(
-            s"graft-ivfpqr-tmp${seq.incrementAndGet()}").toString)
-      case Some(k) =>
-        built.computeIfAbsent(
-          md5(s"refresh|${idx.paths.mkString(",")}|$k|ivfpq|$digest"),
-          h => write(java.nio.file.Files
-            .createTempDirectory(s"graft-ivfpqr-$h").toString))
-    }
-    IvfPqIndex(idx.paths :+ seg,
+    IvfPqIndex(
+      idx.paths :+ DedupIndexStore.cellPartitioned("ivfpq_r",
+        key.map(k => s"refresh|${idx.paths.mkString(",")}|$k"),
+        ivfPqDigest(idx.centroids, idx.codebooks))(
+        Similarity.ivfPqIndexRows(e, idx.centroids, idx.codebooks)),
       idx.vecsTables :+ DedupIndexStore.table("ivfpq_vecs_r",
         key.map(k => s"refresh|${idx.vecsTables.mkString(",")}|$k"),
         s"vecs|$buckets", Seq("vec_id"), buckets)(e),
       idx.centroids, idx.codebooks)
   }
 
-  /** Compact a (possibly much-refreshed) segmented index back to ONE
-    * cell-partitioned segment — the LSM discipline's third verb
-    * (build → refresh per ingest → compact on a period): probe cost
-    * grows with the segment count (one pruned scan per segment), so a
-    * deployment periodically rewrites the union. One O(index) pass
-    * over the stored segments; the corpus is never re-read, the model
-    * never re-applied (segments already carry cell + codes), and the
-    * input segments stay readable until swept — probing the compacted
-    * index is EXACTLY probing the segment list (disjoint row sets,
-    * union order irrelevant). Shared by [[IvfIndex]] and
-    * [[IvfPqIndex]] via the segment list. */
+  /** Compact a segmented index back to ONE cell-partitioned segment —
+    * the LSM discipline's third verb (build → append per ingest →
+    * compact on a trigger): probe cost grows with the segment count
+    * (one pruned scan per segment), so a deployment periodically
+    * rewrites the union. One O(index) pass over the stored segments;
+    * the corpus is never re-read, the model never re-applied
+    * (segments already carry cell + codes), and the input segments
+    * stay readable until swept — probing the compacted index is
+    * EXACTLY probing the segment list (disjoint row sets, union order
+    * irrelevant). The segments are plain path scans with no bucketing
+    * claim, so their Union is safe to write from. Shared by
+    * [[IvfIndex]] and [[IvfPqIndex]] via the segment list. */
   private def compactSegments(spark: SparkSession, paths: Seq[String],
-      family: String): Seq[String] = {
-    if (paths.size == 1) return paths
-    def write(dir: String): String = {
-      createdDirs.add(dir)
-      paths.map(p => spark.read.parquet(p)).reduce(_ unionByName _)
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      dir
-    }
-    Seq(built.computeIfAbsent(
-      md5(s"compact|$family|${paths.mkString(",")}"),
-      h => write(java.nio.file.Files
-        .createTempDirectory(s"graft-$family-c$h").toString)))
-  }
+      family: String): Seq[String] =
+    if (paths.size == 1) paths
+    else Seq(DedupIndexStore.cellPartitioned(s"${family}_c",
+      Some(s"compact|${paths.mkString(",")}"), family)(
+      paths.map(p => spark.read.parquet(p)).reduce(_ unionByName _)))
 
   /** [[compactSegments]] for a stored IVF index. */
   def compactIvfIndex(spark: SparkSession, idx: IvfIndex): IvfIndex =
     IvfIndex(compactSegments(spark, idx.paths, "ivf"), idx.centroids)
 
-  /** Segment ceiling for the ANN family — higher than the text/
-    * fingerprint families' knee of 4 because the IVF-PQ probe
-    * amortizes per-segment pruned scans against its fixed rerank-join
-    * floor: the measured curve (PERF.md §"Compaction trigger policy",
-    * StoredIndexRehearsal ivfpq `seg_probe_n{1,2,4,8,16}` at two
-    * decades) is FLAT through 8 segments and +55% at 16. */
+  /** Segment ceiling for the ANN family, the `maxSegments` the
+    * maintenance drain passes to [[DedupIndexStore.compactWhenOver]] —
+    * higher than the text/fingerprint families' knee of 4 because the
+    * IVF-PQ probe amortizes per-segment pruned scans against its
+    * fixed rerank-join floor: the measured curve (PERF.md §"Compaction
+    * trigger policy", StoredIndexRehearsal ivfpq
+    * `seg_probe_n{1,2,4,8,16}` at two decades) is FLAT through 8
+    * segments and +55% at 16. */
   val DefaultMaxSegments = 8
-
-  /** The LSM trigger for the ANN family
-    * ([[DedupIndexStore.compactExactIfOver]]'s shape): compact once
-    * the code-segment list exceeds `maxSegments`, else return the
-    * index untouched. */
-  def compactIvfPqIfOver(spark: SparkSession, idx: IvfPqIndex,
-      maxSegments: Int = DefaultMaxSegments,
-      buckets: Int = 8): IvfPqIndex =
-    if (idx.paths.size <= maxSegments) idx
-    else compactIvfPqIndex(spark, idx, buckets)
 
   /** [[compactSegments]] for a stored IVF-PQ index — the code
     * segments merge to one cell-partitioned directory and the vecs
     * tables to one bucketed table (the same O(index) pass; the
-    * corpus is never re-read). */
+    * corpus is never re-read). The vecs merge reads through
+    * [[DedupIndexStore.segmentScan]] like every other compaction: a
+    * Union of the co-bucketed vecs tables claims their bucketing, the
+    * writer's same-key repartition is elided against that claim, and
+    * each bucket comes out as one file per input table. */
   def compactIvfPqIndex(spark: SparkSession, idx: IvfPqIndex,
       buckets: Int = 8): IvfPqIndex =
     IvfPqIndex(compactSegments(spark, idx.paths, "ivfpq"),
@@ -269,7 +176,7 @@ object AnnIndexStore {
       else Seq(DedupIndexStore.table("ivfpq_vecs_c",
         Some(s"compact|${idx.vecsTables.mkString(",")}"),
         s"vecs|$buckets", Seq("vec_id"), buckets)(
-        idx.vecsTables.map(spark.table).reduce(_ unionByName _))),
+        DedupIndexStore.segmentScan(spark, idx.vecsTables))),
       idx.centroids, idx.codebooks)
 
   /** Probe a stored IVF-PQ index — output identical to
@@ -315,11 +222,10 @@ object AnnIndexStore {
   def writePqIndex(embs: DataFrame,
       codebooks: Array[Array[Array[Double]]],
       buckets: Int = 8): PqIndex = {
-    val e = embs.select(col("vec_id"),
-      Vectors.toDoubleVec(col("embedding")).as("v"))
+    val e = vectors(embs)
     val key = DedupIndexStore.identityKey(embs)
     val params = s"pq|$buckets|cb:" +
-      md5(codebooks.map(_.map(_.mkString(",")).mkString("|"))
+      DedupIndexStore.md5(codebooks.map(_.map(_.mkString(",")).mkString("|"))
         .mkString(";"))
     PqIndex(
       DedupIndexStore.table("pq_codes", key, params, Seq("vec_id"),

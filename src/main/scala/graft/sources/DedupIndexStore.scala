@@ -78,7 +78,7 @@ object DedupIndexStore {
       plan.canonicalized.toString)
   }
 
-  private def md5(s: String): String =
+  private[sources] def md5(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString.take(12)
@@ -101,27 +101,49 @@ object DedupIndexStore {
       }))
   }
 
-  /** Build-or-reuse one bucketed index table (shared by every stored-
-    * index family — [[PostingsStore]] names its tables through here
-    * too). `build` is by-name: a registry hit never constructs the
-    * relation at all. */
-  private[sources] def table(family: String, key: Option[String],
-      params: String,
-      keys: Seq[String], buckets: Int)(build: => DataFrame): String = {
-    def write(name: String): String = {
+  /** The registry lookup every index writer goes through: a keyed
+    * build is written once per JVM under a name derived from its
+    * identity + parameters; an unkeyed one is written under a fresh
+    * name every time. `write` gets the name and a swept temp dir, and
+    * returns what the registry hands back. */
+  private def registered(family: String, key: Option[String],
+      params: String)(write: (String, String) => String): String = {
+    def create(name: String): String = {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft-idx-$name").toString
       createdDirs.add(dir)
-      Bucketing.writeBucketed(build, name, dir, keys, buckets)
-      name
+      write(name, dir)
     }
     key match {
       case Some(k) =>
-        val name = s"graft_idx_${family}_${md5(k + "|" + params)}"
-        built.computeIfAbsent(name, write)
-      case None => write(s"graft_idx_${family}_tmp${seq.incrementAndGet()}")
+        built.computeIfAbsent(
+          s"graft_idx_${family}_${md5(k + "|" + params)}", create)
+      case None => create(s"graft_idx_${family}_tmp${seq.incrementAndGet()}")
     }
   }
+
+  /** Build-or-reuse one bucketed index table (shared by every stored-
+    * index family — [[PostingsStore]] and [[AnnIndexStore]] name their
+    * tables through here too). `build` is by-name: a registry hit
+    * never constructs the relation at all. Returns the table name. */
+  private[sources] def table(family: String, key: Option[String],
+      params: String,
+      keys: Seq[String], buckets: Int)(build: => DataFrame): String =
+    registered(family, key, params) { (name, dir) =>
+      Bucketing.writeBucketed(build, name, dir, keys, buckets)
+      name
+    }
+
+  /** Build-or-reuse one index directory partitioned by `cell` — the
+    * ANN family's layout ([[AnnIndexStore]]: a probe's literal cell
+    * filter prunes every other cell's files). Same registry and exit
+    * sweep as [[table]]; returns the directory. */
+  private[sources] def cellPartitioned(family: String, key: Option[String],
+      params: String)(build: => DataFrame): String =
+    registered(family, key, params) { (_, dir) =>
+      build.write.mode("overwrite").partitionBy("cell").parquet(dir)
+      dir
+    }
 
   /** Persist the base corpus's distinct-fingerprint index
     * ([[Dedup.exactFpIndex]]) bucketed by fp_md5 — exact dedup's
@@ -215,33 +237,10 @@ object DedupIndexStore {
         Dedup.embeddingVecs(base)))
   }
 
-  /** Fold an ACCEPTED ingest batch into a stored fingerprint index —
-    * the maintenance half of the index lifecycle (build once → probe
-    * per ingest → REFRESH per accepted ingest → probe the next batch
-    * against the refreshed version). Refresh merges id-level
-    * relations: the base corpus text is never re-read or re-hashed
-    * (only the new batch fingerprints), which at 100 TB is the
-    * difference between an O(index)-shuffle refresh and an O(corpus)
-    * rebuild. Writes a NEW versioned table — the old version stays
-    * readable until swept, so a reader never sees a half-written
-    * index. Probing the refreshed index equals probing a from-scratch
-    * index over (base ∪ accepted) — spec-pinned. */
-  def refreshExactIndex(spark: SparkSession, idx: ExactIndex,
-      accepted: DataFrame, buckets: Int = 8): ExactIndex = {
-    val key = identityKey(accepted).map(k => s"refresh|${idx.table}|$k")
-    ExactIndex(table("fp_idx_r", key, s"ex|$buckets", Seq("fp_md5"),
-      buckets)(
-      spark.table(idx.table)
-        .unionByName(Dedup.exactFpIndex(accepted))
-        .distinct()))
-  }
-
   // ---- segment-list lifecycle for the exact face (the PostingsStore
   // SegmentedPostings model; the one banded-free dedup index, so the
-  // segment union has NO cap semantics to reconcile — the minhash/
-  // simhash/embedding band indexes keep id-merge + compact because
-  // their per-bucket caps are a GLOBAL property a per-segment build
-  // cannot reproduce) ------------------------------------------------
+  // segment union has NO cap semantics to reconcile — the banded
+  // faces below move their cap to probe time instead) ----------------
 
   /** A stored fingerprint index as a SEGMENT LIST: each segment is one
     * ingest batch's distinct-fp table. An ingest appends a segment
@@ -293,29 +292,29 @@ object DedupIndexStore {
     * one multi-path scan and measure FLAT in segment count — for
     * them this ceiling is maintenance hygiene (it bounds stored
     * bucket-row amplification and the cap-recovery aggregation's
-    * input), with [[segProbeReadAmpBp]] + the `IfAmplified` verbs as
+    * input), with [[segProbeReadAmpBp]] + [[compactWhenAmplified]] as
     * the precise instrument. The ANN family amortizes segments
     * against a rerank-join floor and keeps a higher ceiling
     * ([[AnnIndexStore.DefaultMaxSegments]]). */
   val DefaultMaxSegments = 4
 
-  /** The LSM trigger — WHEN to run the third verb: compact once the
-    * list exceeds `maxSegments`, otherwise return it untouched (no
-    * new tables, no reads). Maintenance loops call this after each
+  /** The LSM count trigger — WHEN to run the third verb, for any
+    * family's segment list: `compact(idx)` once the list's
+    * `segments` exceed `maxSegments`, otherwise `idx` itself (no new
+    * tables, no reads). Maintenance loops call this after each
     * append; probing the result is identical either way
     * (spec-pinned), only the read amplification changes. */
-  def compactExactIfOver(spark: SparkSession, idx: SegmentedExact,
-      maxSegments: Int = DefaultMaxSegments,
-      buckets: Int = 8): SegmentedExact =
-    if (idx.segments.size <= maxSegments) idx
-    else SegmentedExact(Seq(compactExactSegments(spark, idx, buckets)))
+  def compactWhenOver[I](idx: I, segments: Int, maxSegments: Int)(
+      compact: I => I): I =
+    if (segments <= maxSegments) idx else compact(idx)
 
   /** Compact a segment list back to ONE distinct-fp table — identical
-    * content to [[refreshExactIndex]]'s merge over the same batches
-    * (spec-pinned table-for-table). Reads through [[segmentScan]] so
-    * the distinct's regroup exchange is always real — a Union here
-    * could claim the segments' common bucketing and leave per-segment
-    * groups, i.e. duplicate fingerprints in the compacted table. */
+    * content to a from-scratch [[writeExactIndex]] over the same
+    * batches (spec-pinned table-for-table). Reads through
+    * [[segmentScan]] so the distinct's regroup exchange is always
+    * real — a Union here could claim the segments' common bucketing
+    * and leave per-segment groups, i.e. duplicate fingerprints in the
+    * compacted table. */
   def compactExactSegments(spark: SparkSession, idx: SegmentedExact,
       buckets: Int = 8): ExactIndex = {
     if (idx.segments.size == 1) return idx.segments.head
@@ -325,133 +324,18 @@ object DedupIndexStore {
       segmentScan(spark, idx.segments.map(_.table)).distinct()))
   }
 
-  /** [[refreshExactIndex]] for the minhash index: the stored
-    * (band, bucket → id-list) groups explode back to rows, union the
-    * accepted batch's band rows (the only shingling work — the base
-    * is never re-tokenized), regroup, and rewrite as the next
-    * version; the shingle-set table appends the batch's sets.
-    *
-    * Cap caveat (the one divergence from a from-scratch rebuild,
-    * which only exists in the CAPPED regime): a bucket dropped at an
-    * earlier build because it exceeded `maxBucket` cannot resurrect
-    * its old members — it re-enters with new members only, where a
-    * rebuild would re-drop it entirely. Uncapped (no bucket near the
-    * limit — the common case at sane banding), refresh == rebuild
-    * exactly; DedupIndexStoreSpec pins probe-level equality there.
-    * Deployments in the capped regime compact with a periodic full
-    * build, the usual LSM discipline. */
-  def refreshMinhashIndex(spark: SparkSession, idx: MinhashIndex,
-      accepted: DataFrame, maxBucket: Int = 10000,
-      buckets: Int = 8): MinhashIndex = {
-    val key = identityKey(accepted)
-      .map(k => s"refresh|${idx.bucketsTable}|$k")
-    val params = s"mh|$maxBucket|$buckets"
-    MinhashIndex(
-      table("mh_buckets_r", key, params, Seq("band", "bucket"), buckets)(
-        spark.table(idx.bucketsTable)
-          .select(col("band"), col("bucket"),
-            explode(col("base_ds")).as("doc_id"))
-          .unionByName(Dedup.bandBuckets(
-            Dedup.minhashSignatures(
-              Dedup.shingleSets(accepted, idx.n), idx.numHashes),
-            idx.numHashes, idx.bands))
-          .groupBy("band", "bucket")
-          .agg(collect_list("doc_id").as("base_ds"))
-          .filter(size(col("base_ds")) <= maxBucket)),
-      table("mh_sets_r", key, params, Seq("doc_id"), buckets)(
-        spark.table(idx.setsTable)
-          .unionByName(Dedup.shingleSets(accepted, idx.n))),
-      idx.n, idx.numHashes, idx.bands)
-  }
-
-  /** Compact a (possibly much-refreshed) minhash index: rebuild the
-    * band-bucket table from the stored SHINGLE-SET table — the corpus
-    * text is still never read. This is the answer to the refresh cap
-    * caveat: a refresh cannot resurrect a bucket dropped over
-    * `maxBucket` at an earlier build, but the sets table carries the
-    * full per-doc shingle sets, so a compaction reproduces exactly
-    * what a from-scratch build over the grown corpus would emit
-    * (spec-pinned with a binding cap). The LSM discipline in one
-    * O(index) pass: refresh per ingest, compact on a period. */
-  def compactMinhashIndex(spark: SparkSession, idx: MinhashIndex,
-      maxBucket: Int = 10000, buckets: Int = 8): MinhashIndex = {
-    val key = Some(s"compact|${idx.bucketsTable}|${idx.setsTable}")
-    val params = s"mh|$maxBucket|$buckets"
-    MinhashIndex(
-      table("mh_buckets_c", key, params, Seq("band", "bucket"), buckets)(
-        Dedup.bandBuckets(
-            Dedup.minhashSignatures(spark.table(idx.setsTable),
-              idx.numHashes), idx.numHashes, idx.bands)
-          .groupBy("band", "bucket")
-          .agg(collect_list("doc_id").as("base_ds"))
-          .filter(size(col("base_ds")) <= maxBucket)),
-      idx.setsTable, idx.n, idx.numHashes, idx.bands)
-  }
-
-  /** [[refreshMinhashIndex]] for the simhash index (same id-level
-    * merge shape; the member structs carry the 60-bit fingerprints,
-    * so only the accepted batch is fingerprinted). Same cap caveat. */
-  def refreshSimhashIndex(spark: SparkSession, idx: SimhashIndex,
-      accepted: DataFrame, maxBucket: Int = 65535,
-      buckets: Int = 8): SimhashIndex = {
-    val key = identityKey(accepted).map(k => s"refresh|${idx.table}|$k")
-    SimhashIndex(
-      table("sh_idx_r", key, s"sh|$maxBucket|$buckets",
-        Seq("band", "key"), buckets)(
-        spark.table(idx.table)
-          .select(col("band"), col("key"), explode(col("ds")).as("e"))
-          .select(col("e.doc_base").as("doc_base"),
-            col("e.sh_base").as("sh_base"), col("band"), col("key"))
-          .unionByName(Dedup.simhashBatchBanded(accepted)
-            .toDF("doc_base", "sh_base", "band", "key"))
-          .groupBy("band", "key")
-          .agg(collect_list(struct(col("doc_base"), col("sh_base")))
-            .as("ds"))
-          .filter(size(col("ds")) <= maxBucket)))
-  }
-
-  /** [[refreshMinhashIndex]] for the embedding SRP index — the SAME
-    * plane tables must be passed (the index's geometry; its digest is
-    * part of the refresh key). Same cap caveat. */
-  def refreshEmbeddingIndex(spark: SparkSession, idx: EmbeddingIndex,
-      accepted: DataFrame, tables0: Seq[Seq[Seq[Double]]],
-      maxBucket: Int = 10000, buckets: Int = 8): EmbeddingIndex = {
-    val key = identityKey(accepted)
-      .map(k => s"refresh|${idx.bucketsTable}|$k")
-    val params = s"emb|$maxBucket|$buckets|planes:${md5(tables0.toString)}"
-    EmbeddingIndex(
-      table("emb_buckets_r", key, params, Seq("t", "bucket"), buckets)(
-        spark.table(idx.bucketsTable)
-          .select(col("t"), col("bucket"),
-            explode(col("base_ds")).as("vec_id"))
-          .unionByName(Dedup.embeddingVecs(accepted)
-            .select(col("vec_id"), posexplode(
-              graft.functions.Vectors.srpBucketsAll(col("v"), tables0)))
-            .toDF("vec_id", "t", "bucket")
-            .select(col("t"), col("bucket"), col("vec_id")))
-          .groupBy("t", "bucket")
-          .agg(collect_list("vec_id").as("base_ds"))
-          .filter(size(col("base_ds")) <= maxBucket)),
-      table("emb_vecs_r", key, params, Seq("vec_id"), buckets)(
-        spark.table(idx.vecsTable)
-          .unionByName(Dedup.embeddingVecs(accepted))))
-  }
-
   // ---- segment-list lifecycle for the BANDED families (round 13).
-  // SURVEY argued the banded families keep id-merge because the
-  // per-bucket skew cap is a GLOBAL property a per-segment build
-  // cannot reproduce — that barrier dissolves by MOVING THE CAP TO
-  // PROBE TIME: segments are written UNCAPPED (the cap guards the
-  // candidate pair fan-out B², not storage B — an uncapped stored
-  // list is linear in its batch), and the probe sums member counts
-  // per bucket ACROSS the unioned segments before exploding,
-  // skipping any bucket whose GLOBAL total exceeds the cap. That is
-  // bit-for-bit the single-build cap decision — including when the
-  // cap BINDS (spec-pinned with a binding cap), which the id-merge
-  // refresh cannot claim (its cap caveat). Applied to all three
-  // banded faces (embedding SRP, minhash, simhash): every dedup
-  // index now has an O(batch) ingest path; id-merge refresh remains
-  // the compaction-free alternative. -------------------------------
+  // The per-bucket skew cap is a GLOBAL property a per-segment build
+  // cannot reproduce — so the cap MOVES TO PROBE TIME: segments are
+  // written UNCAPPED (the cap guards the candidate pair fan-out B²,
+  // not storage B — an uncapped stored list is linear in its batch),
+  // and the probe sums member counts per bucket ACROSS the unioned
+  // segments before exploding, skipping any bucket whose GLOBAL
+  // total exceeds the cap. That is bit-for-bit the single-build cap
+  // decision — including when the cap BINDS (spec-pinned with a
+  // binding cap). Applied to all three banded faces (embedding SRP,
+  // minhash, simhash): every dedup index is maintained by O(batch)
+  // appends and an occasional compaction. ---------------------------
 
   /** Observed-metric names for the banded segment probes' READ
     * AMPLIFICATION (r13 verdict stretch item; the [[graft.operators.
@@ -494,8 +378,8 @@ object DedupIndexStore {
     * scan scheduling but no per-bucket re-reading, while appends that
     * keep hitting the same buckets (the near-dup-heavy ingest that
     * actually needs compaction soonest) drive the ratio toward the
-    * count. [[segProbeReadAmpBp]] reads it; the `IfAmplified` verbs
-    * act on it. */
+    * count. [[segProbeReadAmpBp]] reads it; [[compactWhenAmplified]]
+    * acts on it. */
   def segProbeMetricSurvName(family: String): String =
     s"graft_seg_probe_${family}_surv"
 
@@ -528,7 +412,7 @@ object DedupIndexStore {
     * action (observe metrics materialize with the job) or if
     * `probed` is not a segment probe of `family`. This is the
     * serve-side signal a production maintenance loop feeds to
-    * [[compactMinhashIfAmplified]] (etc.): serving runs constantly
+    * [[compactWhenAmplified]]: serving runs constantly
     * anyway, so the amplification is free telemetry, and the loop
     * compacts when serving — not a segment counter — says the list
     * has gone heavy. */
@@ -732,10 +616,8 @@ object DedupIndexStore {
     * bucket rows merge directly (explode members, regroup per
     * (band, bucket), apply the cap on the GLOBAL membership): because
     * segments are uncapped, this equals `writeMinhashIndex` over the
-    * union of the batches EXACTLY — the refresh verb's cap caveat
-    * (a bucket dropped at an earlier capped build cannot resurrect)
-    * does not exist here. O(index); the corpus is never re-read or
-    * re-shingled. */
+    * union of the batches EXACTLY, whether or not the cap binds.
+    * O(index); the corpus is never re-read or re-shingled. */
   def compactMinhashSegments(spark: SparkSession, idx: SegmentedMinhash,
       maxBucket: Int = 10000, buckets: Int = 8): MinhashIndex = {
     val h = idx.segments.head
@@ -801,35 +683,6 @@ object DedupIndexStore {
         segmentScan(spark, idx.segments.map(_.vecsTable))))
   }
 
-  /** LSM triggers for the banded segment lists. Post-hazard-fix
-    * (r14), banded probes read the list as one [[segmentScan]] and
-    * measure FLAT in segment count at all three decades (PERF.md
-    * §"Compaction trigger policy"), so [[DefaultMaxSegments]] here
-    * is periodic hygiene — the precise trigger is the served
-    * read-amplification ([[compactMinhashIfAmplified]] below).
-    * NOTE the compacted result
-    * is a CAPPED single index: keep probing it with [[probeMinhash]]/
-    * [[probeSimhash]]/[[probeEmbedding]], or re-wrap as a fresh
-    * segment list only under the same cap discipline. */
-  def compactMinhashIfOver(spark: SparkSession, idx: SegmentedMinhash,
-      maxSegments: Int = DefaultMaxSegments, maxBucket: Int = 10000,
-      buckets: Int = 8): Either[SegmentedMinhash, MinhashIndex] =
-    if (idx.segments.size <= maxSegments) Left(idx)
-    else Right(compactMinhashSegments(spark, idx, maxBucket, buckets))
-
-  def compactSimhashIfOver(spark: SparkSession, idx: SegmentedSimhash,
-      maxSegments: Int = DefaultMaxSegments, maxBucket: Int = 65535,
-      buckets: Int = 8): Either[SegmentedSimhash, SimhashIndex] =
-    if (idx.segments.size <= maxSegments) Left(idx)
-    else Right(compactSimhashSegments(spark, idx, maxBucket, buckets))
-
-  def compactEmbeddingIfOver(spark: SparkSession,
-      idx: SegmentedEmbedding, maxSegments: Int = DefaultMaxSegments,
-      maxBucket: Int = 10000, buckets: Int = 8):
-      Either[SegmentedEmbedding, EmbeddingIndex] =
-    if (idx.segments.size <= maxSegments) Left(idx)
-    else Right(compactEmbeddingSegments(spark, idx, maxBucket, buckets))
-
   /** Amplification at the measured segment-count knee, in bp: the
     * count knee is 4 ([[DefaultMaxSegments]], three measured decades,
     * PERF.md), and per-bucket amplification equals the count exactly
@@ -841,40 +694,29 @@ object DedupIndexStore {
     * re-reading. */
   val KneeAmpBp = 40000L
 
-  /** Read-amplification-driven LSM triggers (the serve-telemetry
-    * loop closed; r13 stretch item follow-through): instead of
-    * counting segments blind, feed the last EXECUTED probe of this
-    * list — serving runs constantly in production, so its
-    * [[segProbeReadAmpBp]] is free — and compact when the observed
-    * per-bucket amplification crosses `maxAmpBp`. A probe that has
-    * not run (or a df that is not this family's segment probe) reads
-    * as None and the list passes through untouched, so wiring the
-    * trigger before the first serve is safe. The segment-COUNT
-    * trigger ([[compactMinhashIfOver]]) remains the backstop for
-    * scheduling overhead on disjoint-bucket lists. */
-  def compactMinhashIfAmplified(spark: SparkSession,
-      idx: SegmentedMinhash, lastProbe: DataFrame,
-      maxAmpBp: Long = KneeAmpBp, maxBucket: Int = 10000,
-      buckets: Int = 8): Either[SegmentedMinhash, MinhashIndex] =
-    if (!segProbeReadAmpBp(lastProbe, "minhash").exists(_ > maxAmpBp))
-      Left(idx)
-    else Right(compactMinhashSegments(spark, idx, maxBucket, buckets))
-
-  def compactSimhashIfAmplified(spark: SparkSession,
-      idx: SegmentedSimhash, lastProbe: DataFrame,
-      maxAmpBp: Long = KneeAmpBp, maxBucket: Int = 65535,
-      buckets: Int = 8): Either[SegmentedSimhash, SimhashIndex] =
-    if (!segProbeReadAmpBp(lastProbe, "simhash").exists(_ > maxAmpBp))
-      Left(idx)
-    else Right(compactSimhashSegments(spark, idx, maxBucket, buckets))
-
-  def compactEmbeddingIfAmplified(spark: SparkSession,
-      idx: SegmentedEmbedding, lastProbe: DataFrame,
-      maxAmpBp: Long = KneeAmpBp, maxBucket: Int = 10000,
-      buckets: Int = 8): Either[SegmentedEmbedding, EmbeddingIndex] =
-    if (!segProbeReadAmpBp(lastProbe, "embedding").exists(_ > maxAmpBp))
-      Left(idx)
-    else Right(compactEmbeddingSegments(spark, idx, maxBucket, buckets))
+  /** The read-amplification LSM trigger (the serve-telemetry loop
+    * closed): instead of counting segments blind, feed the last
+    * EXECUTED probe of this list — serving runs constantly in
+    * production, so its [[segProbeReadAmpBp]] is free — and get
+    * `compact(idx)` when the observed per-bucket amplification of
+    * `family` is strictly over `maxAmpBp`, otherwise `idx` itself. A
+    * probe that has not run (or a df that is not this family's
+    * segment probe) reads as None and the list passes through
+    * untouched, so wiring the trigger before the first serve is
+    * safe. The count trigger ([[compactWhenOver]]) remains the
+    * backstop for scheduling overhead on disjoint-bucket lists.
+    *
+    * For the banded lists, a compaction that keeps the handle a
+    * segment list runs UNCAPPED (`maxBucket = Int.MaxValue`, as the
+    * maintenance drains pass it): the skew cap stays a probe-time
+    * decision, so the answer does not depend on when the trigger
+    * fired. A capped compaction yields a single index to probe with
+    * [[probeMinhash]]/[[probeSimhash]]/[[probeEmbedding]]. */
+  def compactWhenAmplified[I](idx: I, lastProbe: DataFrame,
+      family: String, maxAmpBp: Long = KneeAmpBp)(compact: I => I): I =
+    if (segProbeReadAmpBp(lastProbe, family).exists(_ > maxAmpBp))
+      compact(idx)
+    else idx
 
   /** Read a stored segment-table list as ONE relation. A single table
     * passes through as its bucketed catalog scan (exchange-free

@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *    bucket-pruned), dl and the corpus scalars from doclens — whose
   *    join leg reads with no Exchange and no Sort (bucket layout ==
   *    join layout), so only the |terms|-scale probe rows shuffle.
-  *  - [[refreshPostings]]: fold accepted documents in by id-level
-  *    merge — the base corpus is never re-read, and unlike the banded
-  *    dedup indexes there is NO cap caveat: refresh == rebuild
+  *  - [[SegmentedPostings]]: accepted documents land as appended
+  *    segments and [[compactSegments]] folds the list back to one
+  *    pair — the base corpus is never re-read, and nothing is ever
+  *    capped out of a postings index, so compaction == rebuild
   *    exactly.
   *
   * At 100 TB this is the difference between a phrase/retrieval query
@@ -71,44 +72,6 @@ object PostingsStore {
       spark.table(idx.doclensTable).hint("merge"), terms, k)
   }
 
-  /** Fold newly accepted documents into a stored postings index — the
-    * maintenance half of the lifecycle (build once → serve → REFRESH
-    * per accepted ingest). Id-level merge: the stored lists explode
-    * back to (term, doc_id, pos) rows, the accepted batch's rows union
-    * in (the only tokenize work), and the regroup reproduces EXACTLY
-    * what a from-scratch build over (base ∪ accepted) would emit —
-    * even for a re-ingested doc_id — because the grouping is the same;
-    * doclens merges by id-level sum. No cap caveat (nothing is ever
-    * dropped from a postings index). Writes NEW versioned tables — the
-    * old version stays readable until swept.
-    *
-    * COST SHAPE: the merge rewrites the whole index — O(index) per
-    * ingest, which a high-ingest deployment cannot pay per batch.
-    * [[appendSegment]] is the O(batch) alternative (Lucene's model);
-    * this single-table merge remains the right call when ingests are
-    * rare and a segment list's per-probe union overhead is not wanted
-    * — it is exactly [[compactSegments]]' verb, fused with the fold. */
-  def refreshPostings(spark: SparkSession, idx: PostingsIndex,
-      accepted: DataFrame, buckets: Int = 8): PostingsIndex = {
-    val key = DedupIndexStore.identityKey(accepted)
-      .map(k => s"refresh|${idx.table}|$k")
-    val params = s"pt|$buckets"
-    PostingsIndex(
-      DedupIndexStore.table("postings_r", key, params, Seq("term"),
-        buckets)(
-        spark.table(idx.table)
-          .select(col("term"), col("doc_id"),
-            explode(col("positions")).as("pos"))
-          .unionByName(CorpusOps.postingRowsFlat(accepted))
-          .groupBy("term", "doc_id")
-          .agg(sort_array(collect_list(col("pos"))).as("positions"))),
-      DedupIndexStore.table("doclens_r", key, params, Seq("doc_id"),
-        buckets)(
-        spark.table(idx.doclensTable)
-          .unionByName(CorpusOps.doclensRows(accepted))
-          .groupBy("doc_id").agg(sum("dl").as("dl"))))
-  }
-
   // ---- segment-list lifecycle (Lucene's model; the text-family twin
   // of AnnIndexStore's IvfIndex segments) --------------------------
 
@@ -121,10 +84,10 @@ object PostingsStore {
     * bucket-pruned by the same literal-term filter (the predicate
     * pushes through the merge regroup and the union into every
     * segment's scan). At 100 TB this is the difference between an
-    * ingest costing O(batch) and costing an index rewrite
-    * ([[refreshPostings]]'s shape); the price is one pruned scan per
-    * segment per probe, which [[compactSegments]] — the LSM
-    * discipline's third verb — resets on a schedule. */
+    * ingest costing O(batch) and costing an index rewrite; the price
+    * is one pruned scan per segment per probe, which
+    * [[compactSegments]] — the LSM discipline's third verb — resets
+    * on a trigger ([[DedupIndexStore.compactWhenOver]]). */
   final case class SegmentedPostings(segments: Seq[PostingsIndex])
 
   /** The base build: one segment from the initial corpus. */
@@ -143,9 +106,9 @@ object PostingsStore {
 
   /** The segment union in the stored postings shape: (term, doc_id)
     * groups that span segments (a re-ingested doc_id) merge by the
-    * SAME regroup a from-scratch build or [[refreshPostings]] applies
-    * — exploded rows unioned then re-collected — so segment serve ==
-    * rebuild exactly, segment order irrelevant. Single segment skips
+    * SAME regroup a from-scratch build applies — exploded rows
+    * unioned then re-collected — so segment serve == rebuild exactly,
+    * segment order irrelevant. Single segment skips
     * the regroup (already grouped at build).
     *
     * The explicit repartition before the regroup is LOAD-BEARING, and
@@ -227,26 +190,17 @@ object PostingsStore {
     CorpusOps.bm25FromPostings(postingsView(spark, idx),
       doclensView(spark, idx), terms, k)
 
-  /** The LSM trigger for the text family
-    * ([[DedupIndexStore.compactExactIfOver]]'s shape): compact once
-    * the list exceeds `maxSegments`, else return it untouched. The
-    * default is the measured knee — the phrase probe pays one
-    * bucket-pruned scan per segment per slot, reads its fixed floor
-    * through 4 segments and 4.1x the floor by 8 at the 10x decade
-    * (PERF.md §"Compaction trigger policy"). */
-  def compactIfOver(spark: SparkSession, idx: SegmentedPostings,
-      maxSegments: Int = DedupIndexStore.DefaultMaxSegments,
-      buckets: Int = 8): SegmentedPostings =
-    if (idx.segments.size <= maxSegments) idx
-    else SegmentedPostings(Seq(compactSegments(spark, idx, buckets)))
-
   /** Compact a segment list back to ONE (postings, doclens) pair —
     * the LSM third verb for the text family: one O(index) pass over
     * the STORED segments (the corpus is never re-tokenized), writing
     * new versioned tables; the input segments stay readable until
     * swept. The merge is exactly the serve-time regroup materialized,
     * so probing the compacted index == probing the segment list ==
-    * a from-scratch rebuild. */
+    * a from-scratch rebuild. The phrase probe pays one bucket-pruned
+    * scan per segment per slot, flat through 4 segments and 4.1x the
+    * floor by 8 at the 10x decade (PERF.md §"Compaction trigger
+    * policy") — hence [[DedupIndexStore.DefaultMaxSegments]] as this
+    * family's count trigger. */
   def compactSegments(spark: SparkSession, idx: SegmentedPostings,
       buckets: Int = 8): PostingsIndex = {
     if (idx.segments.size == 1) return idx.segments.head

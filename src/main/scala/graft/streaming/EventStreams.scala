@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.operators.{EventOps, WordCount}
+import graft.sources.{AnnIndexStore, DedupIndexStore, PostingsStore}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -1763,148 +1764,104 @@ object EventStreams extends Serializable {
       .outputMode(OutputMode.Update())
       .foreachBatch((batch: DataFrame, _: Long) => state.fold(batch))
 
-  /** Maintain the stored positional index from a DOCUMENT stream —
-    * [[drainClusterMap]]'s maintenance-loop shape applied to
-    * [[graft.sources.PostingsStore]], and the deployment story of a
-    * search index over a growing corpus: the base corpus builds v1
-    * once (the lifecycle's one corpus read), the delta documents
-    * replay as micro-batches, each batch folds in via
-    * `refreshPostings` (an id-level O(index) merge — the base text is
-    * never re-read, and each fold writes a NEW versioned table, so a
-    * concurrent reader never sees a half-written index), and the FINAL
-    * version serves the phrase query. Fold order is irrelevant (the
-    * per-(term, doc_id) merge is chunking-independent) and refresh ==
-    * rebuild exactly (nothing is capped out of a postings index), so
-    * the served answer equals the corpus-scan operator over
-    * base ∪ delta — q_phrase_search's oracle verbatim when the split
-    * covers the whole corpus. */
-  def drainPostingsMaintenance(baseDocs: DataFrame, deltaDocs: DataFrame,
-      phrase: Seq[String], nBatches: Int = 3,
-      buckets: Int = 8): DataFrame = {
-    val spark = baseDocs.sparkSession
-    // AtomicReference: folds run on the stream-execution thread and
-    // the final handle is read back on this one — AvailableNow
-    // serializes the folds themselves, but the cross-thread handoff
-    // needs explicit publication (the ClusterMapState discipline)
-    val idx = new java.util.concurrent.atomic.AtomicReference(
-      graft.sources.PostingsStore.writePostings(baseDocs, buckets))
-    // empty delta: nothing to fold — serve from v1, matching the batch
-    // operator over base ∪ ∅ (replayForDrain requires non-empty rows)
-    if (deltaDocs.isEmpty)
-      return graft.sources.PostingsStore.phraseSearch(spark, idx.get,
-        phrase)
-    val (stream, tmp) = replayForDrain(
-      deltaDocs.select(col("doc_id"), col("text")), "doc_id", nBatches)
-    try withDrainShufflePartitions(spark) {
-      // each fold's registry key chains on the predecessor table's
-      // name, so bench re-runs that hit the replay-dir cache also
-      // reuse the fold tables — the deployment cost model (an ingest
-      // folds once; queries serve from storage)
+  /** The one fold loop behind the stored-index maintenance drains —
+    * [[drainClusterMap]]'s loop shape applied to a stored index
+    * handle, and the deployment story of an index over a growing
+    * corpus: the base handle is built once (the lifecycle's one
+    * corpus read), the `delta` rows replay as `nBatches` micro-batches
+    * in ascending `idCol` order, each batch folds into the handle via
+    * foreachBatch (`fold(handle, batch, batchId)`), and the FINAL
+    * handle serves. An empty delta serves the base handle directly
+    * (the replay needs rows) — the batch operator over base ∪ ∅. The
+    * handle crosses threads (folds run on the stream-execution
+    * thread, the serve on this one), so it travels through an
+    * AtomicReference: AvailableNow serializes the folds themselves,
+    * but the handoff needs explicit publication (the ClusterMapState
+    * discipline). */
+  private def drainIndexMaintenance[I](base: I, delta: DataFrame,
+      idCol: String, nBatches: Int)(fold: (I, DataFrame, Long) => I)(
+      serve: I => DataFrame): DataFrame = {
+    if (delta.isEmpty) return serve(base)
+    val idx = new java.util.concurrent.atomic.AtomicReference(base)
+    val (stream, tmp) = replayForDrain(delta, idCol, nBatches)
+    try withDrainShufflePartitions(delta.sparkSession) {
       val q = stream.writeStream
         .outputMode(OutputMode.Update())
-        .foreachBatch((batch: DataFrame, _: Long) => {
-          idx.set(graft.sources.PostingsStore.refreshPostings(spark,
-            idx.get, batch, buckets))
+        .foreachBatch((batch: DataFrame, id: Long) => {
+          idx.set(fold(idx.get, batch, id))
           ()
         })
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
     } finally tmp.foreach(deleteReplayDir)
-    graft.sources.PostingsStore.phraseSearch(spark, idx.get, phrase)
+    serve(idx.get)
   }
 
-  /** [[drainPostingsMaintenance]] in the SEGMENT-APPEND regime — the
-    * production fold for a high-ingest corpus: each micro-batch
-    * tokenizes ONLY itself and lands as an appended segment pair
+  /** Maintain the stored positional index from a DOCUMENT stream in
+    * the SEGMENT-APPEND regime — the production fold for a
+    * high-ingest corpus: each micro-batch tokenizes ONLY itself and
+    * lands as an appended segment pair
     * ([[graft.sources.PostingsStore.appendSegment]], O(batch) per
-    * fold; the id-merge drain above pays O(index) per fold), and the
-    * final segment list serves the phrase. Segments are disjoint row
-    * sets the serve-time regroup unions, so chunking converges to the
-    * same answer — the corpus-scan operator over base ∪ delta,
+    * fold), the LSM count trigger is checked after every fold, and
+    * the final segment list serves the phrase. `maxSegments = 1`
+    * compacts after every fold — the per-fold O(index) merge.
+    * Segments are disjoint row sets the serve-time regroup unions and
+    * compaction == rebuild, so chunking and trigger timing converge
+    * to the same answer — the corpus-scan operator over base ∪ delta,
     * q_phrase_search's oracle verbatim when the split covers the
     * whole corpus. */
   def drainPostingsSegMaintenance(baseDocs: DataFrame,
       deltaDocs: DataFrame, phrase: Seq[String], nBatches: Int = 3,
       buckets: Int = 8,
-      maxSegments: Int =
-        graft.sources.DedupIndexStore.DefaultMaxSegments): DataFrame = {
+      maxSegments: Int = DedupIndexStore.DefaultMaxSegments): DataFrame = {
     val spark = baseDocs.sparkSession
-    // AtomicReference for the cross-thread handle handoff — see
-    // drainPostingsMaintenance
-    val idx = new java.util.concurrent.atomic.AtomicReference(
-      graft.sources.PostingsStore.writeSegmented(baseDocs, buckets))
-    if (deltaDocs.isEmpty)
-      return graft.sources.PostingsStore.phraseSearchSeg(spark,
-        idx.get, phrase)
-    val (stream, tmp) = replayForDrain(
-      deltaDocs.select(col("doc_id"), col("text")), "doc_id", nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch((batch: DataFrame, _: Long) => {
-          // the LSM trigger check rides every fold: append O(batch),
-          // then compact only when the list exceeds the measured knee
-          // (PERF.md §"Compaction trigger policy") — under it the
-          // call returns the list untouched
-          idx.set(graft.sources.PostingsStore.compactIfOver(spark,
-            graft.sources.PostingsStore.appendSegment(idx.get,
-              batch, buckets), maxSegments, buckets))
-          ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally tmp.foreach(deleteReplayDir)
-    graft.sources.PostingsStore.phraseSearchSeg(spark, idx.get, phrase)
+    drainIndexMaintenance(PostingsStore.writeSegmented(baseDocs, buckets),
+        deltaDocs.select(col("doc_id"), col("text")), "doc_id",
+        nBatches) { (idx, batch, _) =>
+      // append O(batch), then compact only when the list exceeds the
+      // measured knee (PERF.md §"Compaction trigger policy")
+      val appended = PostingsStore.appendSegment(idx, batch, buckets)
+      DedupIndexStore.compactWhenOver(appended, appended.segments.size,
+        maxSegments)(l => PostingsStore.SegmentedPostings(
+        Seq(PostingsStore.compactSegments(spark, l, buckets))))
+    }(PostingsStore.phraseSearchSeg(spark, _, phrase))
   }
+
+  /** In-loop compaction for the minhash drains: a pure UNCAPPED merge
+    * of the stored segment rows that keeps the handle a segment list,
+    * so the skew cap stays a PROBE-TIME decision and the loop's answer
+    * is independent of when or how often a trigger fired (spec-pinned
+    * with the trigger forced on). */
+  private def compactMinhashUncapped(spark: SparkSession, buckets: Int)(
+      idx: DedupIndexStore.SegmentedMinhash)
+      : DedupIndexStore.SegmentedMinhash =
+    DedupIndexStore.SegmentedMinhash(Seq(
+      DedupIndexStore.compactMinhashSegments(spark, idx,
+        maxBucket = Int.MaxValue, buckets = buckets)))
 
   /** [[drainPostingsSegMaintenance]] for the DEDUP family's minhash
     * face — the O(batch) production fold for a banded index: each
     * accepted micro-batch shingles ONLY itself and lands as an
     * appended UNCAPPED segment pair
     * ([[graft.sources.DedupIndexStore.appendMinhashSegment]]), the
-    * LSM trigger is checked after every fold, and the final list
-    * serves the next ingest's probe with the probe-time GLOBAL cap.
-    * In-loop compaction runs UNCAPPED (maxBucket = MaxValue — a pure
-    * merge of stored segment rows): the skew cap stays a PROBE-TIME
-    * decision, so the loop's answer is independent of when or how
-    * often the trigger fired (spec-pinned with the trigger forced
-    * on) — the capped-compact refresh caveat never enters the
-    * streaming path. */
+    * count trigger is checked after every fold (compacting through
+    * [[compactMinhashUncapped]]), and the final list serves the next
+    * ingest's probe with the probe-time GLOBAL cap. */
   def drainMinhashSegMaintenance(baseDocs: DataFrame,
       deltaDocs: DataFrame, probeDocs: DataFrame, nBatches: Int = 3,
       buckets: Int = 8,
-      maxSegments: Int =
-        graft.sources.DedupIndexStore.DefaultMaxSegments): DataFrame = {
+      maxSegments: Int = DedupIndexStore.DefaultMaxSegments): DataFrame = {
     val spark = baseDocs.sparkSession
-    import graft.sources.DedupIndexStore
-    // AtomicReference for the cross-thread handle handoff — see
-    // drainPostingsMaintenance
-    val idx = new java.util.concurrent.atomic.AtomicReference(
-      DedupIndexStore.writeMinhashSegmented(baseDocs, buckets = buckets))
-    if (deltaDocs.isEmpty)
-      return DedupIndexStore.probeMinhashSeg(spark, idx.get, probeDocs)
-    val (stream, tmp) = replayForDrain(
-      deltaDocs.select(col("doc_id"), col("text")), "doc_id", nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch((batch: DataFrame, _: Long) => {
-          val appended = DedupIndexStore.appendMinhashSegment(idx.get,
-            batch, buckets)
-          idx.set(
-            if (appended.segments.size <= maxSegments) appended
-            else DedupIndexStore.SegmentedMinhash(Seq(
-              DedupIndexStore.compactMinhashSegments(spark, appended,
-                maxBucket = Int.MaxValue, buckets = buckets))))
-          ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally tmp.foreach(deleteReplayDir)
-    DedupIndexStore.probeMinhashSeg(spark, idx.get, probeDocs)
+    drainIndexMaintenance(
+        DedupIndexStore.writeMinhashSegmented(baseDocs, buckets = buckets),
+        deltaDocs.select(col("doc_id"), col("text")), "doc_id",
+        nBatches) { (idx, batch, _) =>
+      val appended = DedupIndexStore.appendMinhashSegment(idx, batch,
+        buckets)
+      DedupIndexStore.compactWhenOver(appended, appended.segments.size,
+        maxSegments)(compactMinhashUncapped(spark, buckets))
+    }(DedupIndexStore.probeMinhashSeg(spark, _, probeDocs))
   }
 
   /** 1-in-k deterministic sample for the amp drain's TELEMETRY
@@ -1924,7 +1881,7 @@ object EventStreams extends Serializable {
   /** [[drainMinhashSegMaintenance]] with the maintenance decision
     * made by SERVE TELEMETRY instead of a segment counter — the
     * production wiring of [[graft.sources.DedupIndexStore
-    * .compactMinhashIfAmplified]]: each fold appends the O(batch)
+    * .compactWhenAmplified]]: each fold appends the O(batch)
     * segment, SERVES a deterministic [[TelemetryServeSample]] slice
     * of the probe batch (a production index is serving continuously
     * anyway and samples its serves for telemetry — here the sampled
@@ -1935,67 +1892,46 @@ object EventStreams extends Serializable {
     * without a telemetry serve: its maintenance decision could only
     * benefit a subsequent serve, and the drain's final answer is
     * fold-regime-independent by construction (in-loop compaction is
-    * the same pure uncapped merge as the count-triggered drain — the
-    * skew cap stays a probe-time decision), so the answer equals
-    * every other fold regime — the maintenance oracle verbatim, for
-    * ANY sample slice including the empty one (an unexecuted or
-    * empty-sample serve reads as None and the list passes through). */
+    * the same [[compactMinhashUncapped]] merge as the count-triggered
+    * drain), so the answer equals every other fold regime — the
+    * maintenance oracle verbatim, for ANY sample slice including the
+    * empty one (an unexecuted or empty-sample serve reads as None and
+    * the list passes through). */
   def drainMinhashAmpMaintenance(baseDocs: DataFrame,
       deltaDocs: DataFrame, probeDocs: DataFrame, nBatches: Int = 3,
       buckets: Int = 8,
-      maxAmpBp: Long =
-        graft.sources.DedupIndexStore.KneeAmpBp): DataFrame = {
+      maxAmpBp: Long = DedupIndexStore.KneeAmpBp): DataFrame = {
     val spark = baseDocs.sparkSession
-    import graft.sources.DedupIndexStore
-    // AtomicReference for the cross-thread handle handoff — see
-    // drainPostingsMaintenance
-    val idx = new java.util.concurrent.atomic.AtomicReference(
-      DedupIndexStore.writeMinhashSegmented(baseDocs, buckets = buckets))
-    if (deltaDocs.isEmpty)
-      return DedupIndexStore.probeMinhashSeg(spark, idx.get, probeDocs)
     val tele = probeDocs.filter(
       pmod(xxhash64(col("doc_id")), lit(TelemetryServeSample)) === 0)
-    val (stream, tmp) = replayForDrain(
-      deltaDocs.select(col("doc_id"), col("text")), "doc_id", nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch((batch: DataFrame, id: Long) => {
-          val appended = DedupIndexStore.appendMinhashSegment(idx.get,
-            batch, buckets)
-          if (id < nBatches - 1) {
-            // the per-fold sampled serve: executed exhaustively
-            // through its own QueryExecution (executeForTelemetry —
-            // Dataset.foreachPartition would re-plan and the observe
-            // accumulators would read None forever, the r14 bug) so
-            // segProbeReadAmpBp can read the observe accumulators;
-            // zero driver rows
-            val serve = DedupIndexStore.probeMinhashSeg(spark, appended,
-              tele)
-            DedupIndexStore.executeForTelemetry(serve)
-            idx.set(DedupIndexStore.compactMinhashIfAmplified(spark,
-                appended, serve, maxAmpBp,
-                maxBucket = Int.MaxValue, buckets = buckets) match {
-              case Left(still) => still
-              case Right(compacted) =>
-                DedupIndexStore.SegmentedMinhash(Seq(compacted))
-            })
-          } else idx.set(appended)
-          ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally tmp.foreach(deleteReplayDir)
-    DedupIndexStore.probeMinhashSeg(spark, idx.get, probeDocs)
+    drainIndexMaintenance(
+        DedupIndexStore.writeMinhashSegmented(baseDocs, buckets = buckets),
+        deltaDocs.select(col("doc_id"), col("text")), "doc_id",
+        nBatches) { (idx, batch, id) =>
+      val appended = DedupIndexStore.appendMinhashSegment(idx, batch,
+        buckets)
+      if (id < nBatches - 1) {
+        // the per-fold sampled serve: executed exhaustively through
+        // its own QueryExecution (executeForTelemetry —
+        // Dataset.foreachPartition would re-plan and the observe
+        // accumulators would read None forever, the r14 bug) so
+        // segProbeReadAmpBp can read the observe accumulators; zero
+        // driver rows
+        val serve = DedupIndexStore.probeMinhashSeg(spark, appended, tele)
+        DedupIndexStore.executeForTelemetry(serve)
+        DedupIndexStore.compactWhenAmplified(appended, serve, "minhash",
+          maxAmpBp)(compactMinhashUncapped(spark, buckets))
+      } else appended
+    }(DedupIndexStore.probeMinhashSeg(spark, _, probeDocs))
   }
 
-  /** [[drainPostingsMaintenance]] for the ANN family: a VECTOR stream
-    * folds into the stored IVF-PQ index — each micro-batch assigns and
-    * residual-encodes against the frozen model and lands as an
-    * APPENDED cell-partitioned segment
+  /** [[drainPostingsSegMaintenance]] for the ANN family: a VECTOR
+    * stream folds into the stored IVF-PQ index — each micro-batch
+    * assigns and residual-encodes against the frozen model and lands
+    * as an APPENDED cell-partitioned segment
     * ([[graft.sources.AnnIndexStore.refreshIvfPqIndex]], O(batch) per
-    * fold, base segments never touched), and the grown index serves
+    * fold, base segments never touched), the count trigger compacts
+    * past the ANN family's measured knee, and the grown index serves
     * the query batch. Segment order is irrelevant (segments are
     * disjoint row sets a probe unions), so any chunking converges to
     * the same index — the answer equals the inline operator over
@@ -2005,36 +1941,17 @@ object EventStreams extends Serializable {
       queries: DataFrame, centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]], k: Int, nProbe: Int,
       refine: Int, nBatches: Int = 3, buckets: Int = 8,
-      maxSegments: Int =
-        graft.sources.AnnIndexStore.DefaultMaxSegments): DataFrame = {
+      maxSegments: Int = AnnIndexStore.DefaultMaxSegments): DataFrame = {
     val spark = baseVecs.sparkSession
-    // AtomicReference for the cross-thread handle handoff — see
-    // drainPostingsMaintenance
-    val idx = new java.util.concurrent.atomic.AtomicReference(
-      graft.sources.AnnIndexStore.writeIvfPqIndex(baseVecs,
-        centroids, codebooks, buckets))
-    if (deltaVecs.isEmpty)
-      return graft.sources.AnnIndexStore.probeIvfPq(spark, idx.get,
-        queries, k, nProbe, refine)
-    val (stream, tmp) = replayForDrain(
-      deltaVecs.select(col("vec_id"), col("embedding")), "vec_id",
-      nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch((batch: DataFrame, _: Long) => {
-          // append O(batch), then the LSM trigger check — compacts
-          // only past the ANN family's measured knee of 8
-          idx.set(graft.sources.AnnIndexStore.compactIvfPqIfOver(spark,
-            graft.sources.AnnIndexStore.refreshIvfPqIndex(spark,
-              idx.get, batch, buckets), maxSegments, buckets))
-          ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally tmp.foreach(deleteReplayDir)
-    graft.sources.AnnIndexStore.probeIvfPq(spark, idx.get, queries, k,
-      nProbe, refine)
+    drainIndexMaintenance(
+        AnnIndexStore.writeIvfPqIndex(baseVecs, centroids, codebooks,
+          buckets),
+        deltaVecs.select(col("vec_id"), col("embedding")), "vec_id",
+        nBatches) { (idx, batch, _) =>
+      val appended = AnnIndexStore.refreshIvfPqIndex(spark, idx, batch,
+        buckets)
+      DedupIndexStore.compactWhenOver(appended, appended.paths.size,
+        maxSegments)(AnnIndexStore.compactIvfPqIndex(spark, _, buckets))
+    }(AnnIndexStore.probeIvfPq(spark, _, queries, k, nProbe, refine))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import graft.sources.AnnIndexStore
+import graft.sources.{AnnIndexStore, DedupIndexStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -169,8 +169,12 @@ class AnnIndexStoreSpec extends SparkSpec {
     // the LSM TRIGGER: 2 segments sit under the ANN knee (8) — the
     // same index back untouched; a forced ceiling of 1 compacts, and
     // the probe answer survives the fold
-    assert(AnnIndexStore.compactIvfPqIfOver(spark, v2) eq v2)
-    val t = AnnIndexStore.compactIvfPqIfOver(spark, v2, maxSegments = 1)
+    def compact(i: AnnIndexStore.IvfPqIndex) =
+      AnnIndexStore.compactIvfPqIndex(spark, i)
+    assert(DedupIndexStore.compactWhenOver(v2, v2.paths.size,
+      AnnIndexStore.DefaultMaxSegments)(compact) eq v2)
+    val t = DedupIndexStore.compactWhenOver(v2, v2.paths.size,
+      maxSegments = 1)(compact)
     assert(t.paths.size == 1)
     assert(rows(AnnIndexStore.probeIvfPq(spark, t, queries,
       k = 10, nProbe = 2, refine = 4)) == grown)

@@ -103,47 +103,6 @@ class DedupIndexStoreSpec extends SparkSpec {
     assertNoExchangeLeg(finalPlan(probe), idx.table)
   }
 
-  test("refreshed indexes == from-scratch rebuild at probe level " +
-      "(uncapped regime): the maintenance loop never re-reads the base") {
-    // three generations: base builds v1, gen1 folds in via refresh,
-    // gen2 probes v2 — must equal both a from-scratch index over
-    // (base ∪ gen1) and the inline operator over the same split
-    val gen1 = corpus.filter(pmod(col("doc_id"), lit(8)) === 4)
-    val gen2 = corpus.filter(pmod(col("doc_id"), lit(8)) === 0)
-    val grown = corpus.filter(pmod(col("doc_id"), lit(8)) =!= 0)
-    val v2 = DedupIndexStore.refreshMinhashIndex(spark,
-      DedupIndexStore.writeMinhashIndex(base), gen1)
-    val got = rows(DedupIndexStore.probeMinhash(spark, v2, gen2))
-    assert(got.nonEmpty, "fixture must produce cross-generation dups")
-    assert(got == rows(DedupIndexStore.probeMinhash(spark,
-      DedupIndexStore.writeMinhashIndex(grown), gen2)))
-    assert(got == rows(Dedup.incrementalNearDupPairs(grown, gen2)))
-    val e2 = DedupIndexStore.refreshExactIndex(spark,
-      DedupIndexStore.writeExactIndex(base), gen1)
-    val gotE = rows(DedupIndexStore.probeExact(spark, e2, gen2)
-      .select(col("doc_id"), col("fp_md5")))
-    assert(gotE.nonEmpty)
-    assert(gotE == rows(Dedup.incrementalExact(grown, gen2)
-      .select(col("doc_id"), col("fp_md5"))))
-    val s2 = DedupIndexStore.refreshSimhashIndex(spark,
-      DedupIndexStore.writeSimhashIndex(base), gen1)
-    assert(rows(DedupIndexStore.probeSimhash(spark, s2, gen2)) ==
-      rows(Dedup.incrementalSimhashPairs(grown, gen2)))
-    val planes = Seq.tabulate(4)(t => Seq.tabulate(4)(j =>
-      Seq.tabulate(64)(i => if (i == 4 * t + j) 1.0 else 0.0)))
-    val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val eb = embs.filter(pmod(col("vec_id"), lit(4)) =!= 0)
-    val eg1 = embs.filter(pmod(col("vec_id"), lit(8)) === 4)
-    val eg2 = embs.filter(pmod(col("vec_id"), lit(8)) === 0)
-    val v2e = DedupIndexStore.refreshEmbeddingIndex(spark,
-      DedupIndexStore.writeEmbeddingIndex(eb, planes), eg1, planes)
-    assert(rows(DedupIndexStore.probeEmbedding(spark, v2e, eg2,
-        threshold = 0.4, tables = planes)) ==
-      rows(Dedup.incrementalEmbeddingNearDup(
-        embs.filter(pmod(col("vec_id"), lit(8)) =!= 0), eg2,
-        threshold = 0.4, planes = Some(planes))))
-  }
-
   test("segmented exact index: O(batch) append — base table untouched, " +
       "segment probe == id-merge refresh probe == inline; compaction " +
       "== refresh table-for-table; single-segment compact is a no-op") {
@@ -161,17 +120,17 @@ class DedupIndexStoreSpec extends SparkSpec {
     val got = rows(DedupIndexStore.probeExactSeg(spark, v2, gen2)
       .select(col("doc_id"), col("fp_md5")))
     assert(got.nonEmpty)
-    // one answer, two fold regimes: segment union == id-merge refresh
-    val e2 = DedupIndexStore.refreshExactIndex(spark,
-      DedupIndexStore.writeExactIndex(base), gen1)
+    // one answer, two index shapes: segment union == a from-scratch
+    // build over the grown base
+    val e2 = DedupIndexStore.writeExactIndex(grown)
     assert(got == rows(DedupIndexStore.probeExact(spark, e2, gen2)
       .select(col("doc_id"), col("fp_md5"))))
     assert(got == rows(Dedup.incrementalExact(grown, gen2)
       .select(col("doc_id"), col("fp_md5"))))
-    // compaction == the id-merge table, row for row — this is also
-    // the union-partitioning fence's answer-level canary: without the
-    // repartition before the distinct, the compacted table carries
-    // per-segment duplicate fingerprints
+    // compaction == the from-scratch table, row for row — this is
+    // also the union-partitioning hazard's answer-level canary: if the
+    // distinct's regroup exchange were elided, the compacted table
+    // would carry per-segment duplicate fingerprints
     val c = DedupIndexStore.compactExactSegments(spark, v2)
     assert(!v2.segments.contains(c))
     assert(rows(spark.table(c.table).orderBy("fp_md5")) ==
@@ -182,12 +141,17 @@ class DedupIndexStoreSpec extends SparkSpec {
     val one = DedupIndexStore.writeExactSegmented(base)
     assert(DedupIndexStore.compactExactSegments(spark, one) ==
       one.segments.head)
-    // the LSM TRIGGER: at or under the measured knee (4) the list
-    // comes back untouched — the same instance, no new tables; above
-    // a tighter ceiling it folds to one segment with the same probe
-    assert(DedupIndexStore.compactExactIfOver(spark, v2) eq v2)
-    val t = DedupIndexStore.compactExactIfOver(spark, v2,
-      maxSegments = 1)
+    // the LSM count TRIGGER: at or under the measured knee (4) the
+    // list comes back untouched — the same instance, no new tables;
+    // above a tighter ceiling it folds to one segment with the same
+    // probe
+    def compact(l: DedupIndexStore.SegmentedExact) =
+      DedupIndexStore.SegmentedExact(
+        Seq(DedupIndexStore.compactExactSegments(spark, l)))
+    assert(DedupIndexStore.compactWhenOver(v2, v2.segments.size,
+      DedupIndexStore.DefaultMaxSegments)(compact) eq v2)
+    val t = DedupIndexStore.compactWhenOver(v2, v2.segments.size,
+      maxSegments = 1)(compact)
     assert(t.segments.size == 1)
     assert(rows(DedupIndexStore.probeExactSeg(spark, t, gen2)
       .select(col("doc_id"), col("fp_md5"))) == got)
@@ -201,9 +165,10 @@ class DedupIndexStoreSpec extends SparkSpec {
     // alone and the probe finds them), so plant two EXACT-duplicate
     // base docs + an identical next-ingest doc: the base pair
     // co-buckets in all 16 bands, cap 1 drops every one, and the
-    // capped answer provably loses those cross pairs. Compaction
-    // rebuilds bands from the stored shingle sets and must equal the
-    // from-scratch capped rebuild exactly.
+    // capped answer provably loses those cross pairs. Compacting the
+    // UNCAPPED segment list under that cap merges the stored bucket
+    // rows, applies the cap on the GLOBAL membership, and must equal
+    // the from-scratch capped rebuild exactly.
     import spark.implicits._
     val dupText = "omega psi chi phi upsilon tau sigma rho pi omicron"
     val planted = Seq(
@@ -216,11 +181,10 @@ class DedupIndexStoreSpec extends SparkSpec {
     val gen1 = all.filter(pmod(col("doc_id"), lit(8)) === 4)
     val gen2 = all.filter(pmod(col("doc_id"), lit(8)) === 0)
     val grown = all.filter(pmod(col("doc_id"), lit(8)) =!= 0)
-    val v2 = DedupIndexStore.refreshMinhashIndex(spark,
-      DedupIndexStore.writeMinhashIndex(pBase, maxBucket = 1), gen1,
-      maxBucket = 1)
+    val v2 = DedupIndexStore.appendMinhashSegment(
+      DedupIndexStore.writeMinhashSegmented(pBase), gen1)
     val compacted =
-      DedupIndexStore.compactMinhashIndex(spark, v2, maxBucket = 1)
+      DedupIndexStore.compactMinhashSegments(spark, v2, maxBucket = 1)
     val rebuilt =
       DedupIndexStore.writeMinhashIndex(grown, maxBucket = 1)
     val want = rows(DedupIndexStore.probeMinhash(spark, rebuilt, gen2))
@@ -297,8 +261,7 @@ class DedupIndexStoreSpec extends SparkSpec {
       threshold = 0.4, tables = planes))
     assert(got.nonEmpty)
     // one answer, THREE execution models
-    val r2 = DedupIndexStore.refreshEmbeddingIndex(spark,
-      DedupIndexStore.writeEmbeddingIndex(eb, planes), eg1, planes)
+    val r2 = DedupIndexStore.writeEmbeddingIndex(grown, planes)
     assert(got == rows(DedupIndexStore.probeEmbedding(spark, r2, eg2,
       threshold = 0.4, tables = planes)))
     assert(got == rows(Dedup.incrementalEmbeddingNearDup(grown, eg2,
@@ -307,8 +270,7 @@ class DedupIndexStoreSpec extends SparkSpec {
     // under these planes and set the cap just below its population —
     // the single capped build drops it, and the segment probe's
     // global sum must reach the same verdict even though EACH
-    // SEGMENT's share sits under the cap (the refresh caveat this
-    // face does not carry)
+    // SEGMENT's share sits under the cap
     val occ = Dedup.embeddingBandIndex(grown, planes,
         maxBucket = Int.MaxValue)
       .select(size(col("base_ds")).as("n"))
@@ -337,8 +299,11 @@ class DedupIndexStoreSpec extends SparkSpec {
       maxBucket = cap)
     assert(rows(DedupIndexStore.probeEmbedding(spark, ecCap, eg2,
       threshold = 0.4, tables = planes)) == capped)
-    assert(DedupIndexStore.compactEmbeddingIfOver(spark, v2)
-      .left.exists(_ eq v2))
+    assert(DedupIndexStore.compactWhenOver(v2, v2.segments.size,
+      DedupIndexStore.DefaultMaxSegments)(l =>
+      DedupIndexStore.SegmentedEmbedding(
+        Seq(DedupIndexStore.compactEmbeddingSegments(spark, l)),
+        l.planesDigest)) eq v2)
     // geometry guard (r13 advice): appending or probing under
     // DIFFERENT planes than the list was built with must refuse
     // loudly — a mixed-geometry list would probe silently wrong
@@ -383,8 +348,7 @@ class DedupIndexStoreSpec extends SparkSpec {
       case _ => false
     }, "totals leg must scan n_members without member lists:\n" +
       finalPlan(segProbe))
-    val mr2 = DedupIndexStore.refreshMinhashIndex(spark,
-      DedupIndexStore.writeMinhashIndex(base), gen1)
+    val mr2 = DedupIndexStore.writeMinhashIndex(grown)
     assert(gotM == rows(DedupIndexStore.probeMinhash(spark, mr2, gen2)))
     assert(gotM == rows(Dedup.incrementalNearDupPairs(grown, gen2)))
     // binding cap: the fullest (band, bucket) of the grown base —
@@ -405,8 +369,7 @@ class DedupIndexStoreSpec extends SparkSpec {
     val s2 = DedupIndexStore.appendSimhashSegment(s1, gen1)
     val gotS = rows(DedupIndexStore.probeSimhashSeg(spark, s2, gen2))
     assert(gotS.nonEmpty)
-    val sr2 = DedupIndexStore.refreshSimhashIndex(spark,
-      DedupIndexStore.writeSimhashIndex(base), gen1)
+    val sr2 = DedupIndexStore.writeSimhashIndex(grown)
     assert(gotS == rows(DedupIndexStore.probeSimhash(spark, sr2, gen2)))
     assert(gotS == rows(Dedup.incrementalSimhashPairs(grown, gen2)))
     val sOcc = Dedup.simhashBandIndex(grown, maxBucket = Int.MaxValue)
@@ -424,7 +387,7 @@ class DedupIndexStoreSpec extends SparkSpec {
     // ---- the LSM third verb: compaction merges stored bucket rows
     // with the cap applied on GLOBAL membership — probe equality to
     // the segment list, including under the BINDING caps above (the
-    // regime where compact == from-scratch build but refresh != )
+    // regime a per-segment cap could not reproduce)
     val mc = DedupIndexStore.compactMinhashSegments(spark, m2)
     assert(rows(DedupIndexStore.probeMinhash(spark, mc, gen2)) == gotM)
     val mcCap = DedupIndexStore.compactMinhashSegments(spark, m2,
@@ -437,12 +400,21 @@ class DedupIndexStoreSpec extends SparkSpec {
       maxBucket = sCap)
     assert(rows(DedupIndexStore.probeSimhash(spark, scCap, gen2))
       == sCapped)
-    // the trigger: at or under the knee the list comes back (Left,
-    // same instance); over a forced ceiling it compacts (Right)
-    assert(DedupIndexStore.compactMinhashIfOver(spark, m2)
-      .left.exists(_ eq m2))
-    assert(DedupIndexStore.compactSimhashIfOver(spark, s2,
-      maxSegments = 1).isRight)
+    // the count trigger: at or under the knee the list comes back
+    // (same instance); over a forced ceiling it compacts (uncapped,
+    // so the list keeps serving the probe-time cap) and serves the
+    // segment probe's rows
+    assert(DedupIndexStore.compactWhenOver(m2, m2.segments.size,
+      DedupIndexStore.DefaultMaxSegments)(l =>
+      DedupIndexStore.SegmentedMinhash(Seq(DedupIndexStore
+        .compactMinhashSegments(spark, l, maxBucket = Int.MaxValue))))
+      eq m2)
+    val st = DedupIndexStore.compactWhenOver(s2, s2.segments.size,
+      maxSegments = 1)(l => DedupIndexStore.SegmentedSimhash(Seq(
+      DedupIndexStore.compactSimhashSegments(spark, l,
+        maxBucket = Int.MaxValue))))
+    assert(st.segments.size == 1)
+    assert(rows(DedupIndexStore.probeSimhashSeg(spark, st, gen2)) == gotS)
   }
 
   test("drained minhash segment-fold loop == the batch segment probe; " +
@@ -540,9 +512,11 @@ class DedupIndexStoreSpec extends SparkSpec {
     val unexecuted = DedupIndexStore.probeMinhashSeg(spark, v1, probe2)
     assert(DedupIndexStore.segProbeReadAmpBp(unexecuted, "minhash")
       .isEmpty)
-    assert(DedupIndexStore
-      .compactMinhashIfAmplified(spark, v1, unexecuted)
-      .left.exists(_ eq v1))
+    def compact(l: DedupIndexStore.SegmentedMinhash) =
+      DedupIndexStore.SegmentedMinhash(
+        Seq(DedupIndexStore.compactMinhashSegments(spark, l)))
+    assert(DedupIndexStore.compactWhenAmplified(v1, unexecuted,
+      "minhash")(compact) eq v1)
     // two segments: amp is bounded by the segment count and never
     // below the floor
     val v2 = DedupIndexStore.appendMinhashSegment(v1, gen1)
@@ -550,18 +524,17 @@ class DedupIndexStoreSpec extends SparkSpec {
     val segRows = rows(p2)
     val amp = DedupIndexStore.segProbeReadAmpBp(p2, "minhash").get
     assert(amp >= 10000L && amp <= 20000L)
-    // at-or-under the observed amp -> Left (the trigger is strict-over,
-    // like the count trigger's `<=`)
-    assert(DedupIndexStore
-      .compactMinhashIfAmplified(spark, v2, p2, maxAmpBp = amp)
-      .left.exists(_ eq v2))
+    // at-or-under the observed amp -> the same instance (the trigger
+    // is strict-over, like the count trigger's `<=`)
+    assert(DedupIndexStore.compactWhenAmplified(v2, p2, "minhash",
+      maxAmpBp = amp)(compact) eq v2)
     // forced under the observed amp -> compacts, and the compacted
     // single-index probe returns the segment probe's exact rows
-    val c = DedupIndexStore
-      .compactMinhashIfAmplified(spark, v2, p2, maxAmpBp = amp - 1)
-    assert(c.isRight)
+    val c = DedupIndexStore.compactWhenAmplified(v2, p2, "minhash",
+      maxAmpBp = amp - 1)(compact)
+    assert(c.segments.size == 1)
     assert(rows(DedupIndexStore.probeMinhash(spark,
-      c.toOption.get, probe2)) == segRows)
+      c.segments.head, probe2)) == segRows)
   }
 
   test("union-partitioning hazard regression (r14 100x crash shape): " +

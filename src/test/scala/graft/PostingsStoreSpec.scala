@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.CorpusOps
-import graft.sources.PostingsStore
+import graft.sources.{DedupIndexStore, PostingsStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -23,6 +23,16 @@ class PostingsStoreSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** The id-level merge a re-ingest must reproduce, computed
+    * straight from the documents: postings regrouped per
+    * (term, doc_id) over every ingested row, doclens summed per
+    * doc_id ("re-ingest adds lengths"). */
+  private def idMerge(ingests: DataFrame*): (DataFrame, DataFrame) = {
+    val all = ingests.reduce(_ unionByName _)
+    (CorpusOps.postingsRows(all),
+      CorpusOps.doclensRows(all).groupBy("doc_id").agg(sum("dl").as("dl")))
+  }
 
   private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
     val kids = p match {
@@ -125,44 +135,6 @@ class PostingsStoreSpec extends SparkSpec {
     }
   }
 
-  test("refreshed postings == from-scratch rebuild: phrase and bm25 " +
-      "served from v2 equal the corpus operators; v2 is a new version") {
-    val docs = corpus(spark)
-    val base = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
-    val accepted = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-    val v1 = PostingsStore.writePostings(base)
-    val v2 = PostingsStore.refreshPostings(spark, v1, accepted)
-    // versioned: refresh never overwrites the tables a reader may hold
-    assert(v2.table != v1.table && v2.doclensTable != v1.doclensTable)
-    // base ∪ accepted = the whole corpus, so v2 must answer exactly
-    // like the corpus-scan operators — and like an index built from
-    // scratch over the full corpus (refresh == rebuild, no cap caveat)
-    assert(rows(PostingsStore.phraseSearch(spark, v2, phrase)) ==
-      rows(CorpusOps.phraseSearch(docs, phrase)))
-    val terms = Seq("spark", "window", "scan")
-    assert(rows(PostingsStore.bm25Search(spark, v2, terms)) ==
-      rows(CorpusOps.bm25(docs, terms)))
-    val full = PostingsStore.writePostings(docs)
-    assert(rows(spark.table(v2.table).orderBy("term", "doc_id")) ==
-      rows(spark.table(full.table).orderBy("term", "doc_id")))
-    assert(rows(spark.table(v2.doclensTable).orderBy("doc_id")) ==
-      rows(spark.table(full.doclensTable).orderBy("doc_id")))
-  }
-
-  test("streamed maintenance loop: delta docs folding in as micro-" +
-      "batches serve the same phrase answer; empty delta serves v1") {
-    val docs = corpus(spark)
-    val inline = rows(CorpusOps.phraseSearch(docs, phrase))
-    val base = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
-    val delta = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-    assert(rows(graft.streaming.EventStreams.drainPostingsMaintenance(
-      base, delta, phrase)) == inline)
-    // empty delta: nothing to fold — the answer is v1's (base-only)
-    assert(rows(graft.streaming.EventStreams.drainPostingsMaintenance(
-      base, delta.limit(0), phrase)) ==
-      rows(CorpusOps.phraseSearch(base, phrase)))
-  }
-
   test("segment lifecycle: O(batch) append — base segment files " +
       "untouched, serve == corpus operators, every segment's slot " +
       "scan bucket-prunes") {
@@ -210,17 +182,16 @@ class PostingsStoreSpec extends SparkSpec {
       "merge exactly like refreshPostings' id-level merge") {
     val docs = corpus(spark)
     val reingest = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-    // id-merge lineage: the whole corpus + the quarter folds in again
-    val ref = PostingsStore.refreshPostings(spark,
-      PostingsStore.writePostings(docs), reingest)
+    // id-merge reference: the whole corpus + the quarter again
+    val (postings, doclens) = idMerge(docs, reingest)
     // segment lineage: same re-ingest as an appended segment
     val seg = PostingsStore.appendSegment(
       PostingsStore.writeSegmented(docs), reingest)
     assert(rows(PostingsStore.phraseSearchSeg(spark, seg, phrase)) ==
-      rows(PostingsStore.phraseSearch(spark, ref, phrase)))
+      rows(CorpusOps.phraseFromPostings(postings, phrase)))
     val terms = Seq("spark", "window", "scan")
     assert(rows(PostingsStore.bm25SearchSeg(spark, seg, terms)) ==
-      rows(PostingsStore.bm25Search(spark, ref, terms)))
+      rows(CorpusOps.bm25FromPostings(postings, doclens, terms)))
   }
 
   test("duplicate segment OCCURRENCES (identical batch re-appended " +
@@ -245,14 +216,12 @@ class PostingsStoreSpec extends SparkSpec {
     assert(seg.segments(1) == seg.segments(2),
       "expected the identical re-appended batch to reuse one " +
         s"physical segment, got ${seg.segments}")
-    val ref = PostingsStore.refreshPostings(spark,
-      PostingsStore.refreshPostings(spark,
-        PostingsStore.writePostings(base), batch), batch)
+    val (postings, doclens) = idMerge(base, batch, batch)
     val terms = Seq("spark", "window", "scan")
     assert(rows(PostingsStore.bm25SearchSeg(spark, seg, terms)) ==
-      rows(PostingsStore.bm25Search(spark, ref, terms)))
+      rows(CorpusOps.bm25FromPostings(postings, doclens, terms)))
     assert(rows(PostingsStore.phraseSearchSeg(spark, seg, phrase)) ==
-      rows(PostingsStore.phraseSearch(spark, ref, phrase)))
+      rows(CorpusOps.phraseFromPostings(postings, phrase)))
   }
 
   test("union-partitioning hazard: the cross-segment doclens merge " +
@@ -362,11 +331,16 @@ class PostingsStoreSpec extends SparkSpec {
     val v4 = subs.foldLeft(PostingsStore.writeSegmented(base))(
       (acc, b) => PostingsStore.appendSegment(acc, b))
     assert(v4.segments.size == 4)
+    def compact(l: PostingsStore.SegmentedPostings) =
+      PostingsStore.SegmentedPostings(
+        Seq(PostingsStore.compactSegments(spark, l)))
     // at the default knee (4): under/equal — the SAME list back, no
     // new tables
-    assert(PostingsStore.compactIfOver(spark, v4) eq v4)
+    assert(DedupIndexStore.compactWhenOver(v4, v4.segments.size,
+      DedupIndexStore.DefaultMaxSegments)(compact) eq v4)
     // above a tighter ceiling: one segment, same phrase answer
-    val c = PostingsStore.compactIfOver(spark, v4, maxSegments = 2)
+    val c = DedupIndexStore.compactWhenOver(v4, v4.segments.size,
+      maxSegments = 2)(compact)
     assert(c.segments.size == 1)
     assert(rows(PostingsStore.phraseSearchSeg(spark, c, phrase)) ==
       rows(PostingsStore.phraseSearchSeg(spark, v4, phrase)))
@@ -381,6 +355,11 @@ class PostingsStoreSpec extends SparkSpec {
       .drainPostingsSegMaintenance(base, delta, phrase,
         maxSegments = 1)) ==
       rows(CorpusOps.phraseSearch(docs, phrase)))
+    // empty delta: nothing to fold — the answer is the base build's
+    assert(rows(graft.streaming.EventStreams
+      .drainPostingsSegMaintenance(base, delta.limit(0), phrase,
+        maxSegments = 1)) ==
+      rows(CorpusOps.phraseSearch(base, phrase)))
   }
 
   test("streamed segment maintenance loop: delta docs appending " +
