@@ -68,6 +68,9 @@ object GraftFunctions {
     "graft_dot" ->
       ((es: Seq[Expression]) => { arity("graft_dot", es, 2)
         DotProduct(es(0), es(1)) }),
+    "graft_letter_tokens" ->
+      ((es: Seq[Expression]) => { arity("graft_letter_tokens", es, 1)
+        LetterTokens(es(0)) }),
     "graft_text_profile" ->
       ((es: Seq[Expression]) => { arity("graft_text_profile", es, 1)
         TextProfile(es(0)) }),
@@ -135,11 +138,13 @@ object GraftFunctions {
   *   spark.sql.extensions=graft.functions.GraftExtensions
   *
   * the deployment-grade form of [[GraftFunctions.register]] (which
-  * patches one already-running session). */
+  * patches one already-running session). It also injects the fused
+  * word-count planner strategy, so SQL counting `explode` over
+  * `graft_letter_tokens` counts in-mapper too. */
 class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(
-      ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+      ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.bindings.foreach { case (name, builder) =>
       ext.injectFunction((
         new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
@@ -147,4 +152,6 @@ class GraftExtensions
           classOf[GraftExtensions].getName, name),
         builder))
     }
+    ext.injectPlannerStrategy(_ => graft.operators.FusedWordCountStrategy)
+  }
 }

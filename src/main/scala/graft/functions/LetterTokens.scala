@@ -74,25 +74,24 @@ object LetterTokens {
     } else -1
   }
 
-  /** One pass over the bytes of `s`; called from generated code.
+  /** The next token of the `n` UTF-8 bytes at `base`/`off`, searching
+    * from byte `from`: `start << 32 | end` (end exclusive), or -1 when
+    * no letter is left. The one byte walk of the tokenizer: [[tokens]]
+    * and [[graft.operators.FusedWordCountExec]]'s counter both loop
+    * over it, resuming at the returned `end`.
     *
     * A malformed sequence advances one byte. The bytes it skips that
     * way are continuation bytes (0x80-0xBF), which can neither start
     * a code point nor be letters, so the tokens are those of the
     * replacement-decoded string whatever length the decoder gives each
     * U+FFFD. */
-  def tokens(s: UTF8String): ArrayData = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val n = s.numBytes
-    var out = new Array[Any](16)
-    var count = 0
+  def nextToken(base: AnyRef, off: Long, n: Int, from: Int): Long = {
     var start = -1
-    var i = 0
-    while (i <= n) {
+    var i = from
+    while (i < n) {
       var len = 1
-      val letter = i < n && {
-        val b = Platform.getByte(base, off + i) & 0xff
+      val b = Platform.getByte(base, off + i) & 0xff
+      val letter =
         if (b < 0x80) {
           val l = (b | 0x20) - 'a'
           l >= 0 && l < 26
@@ -100,23 +99,37 @@ object LetterTokens {
           val d = decode(base, off + i, n - i, b)
           d >= 0 && { len = d >>> 21; Character.isLetter(d & 0x1FFFFF) }
         }
-      }
       if (letter) {
         if (start < 0) start = i
-      } else if (start >= 0) {
-        val bytes = new Array[Byte](i - start)
-        Platform.copyMemory(base, off + start, bytes,
-          Platform.BYTE_ARRAY_OFFSET, bytes.length)
-        if (count == out.length) {
-          val grown = new Array[Any](count * 2)
-          System.arraycopy(out, 0, grown, 0, count)
-          out = grown
-        }
-        out(count) = UTF8String.fromBytes(bytes)
-        count += 1
-        start = -1
-      }
+      } else if (start >= 0) return (start.toLong << 32) | i
       i += len
+    }
+    if (start >= 0) (start.toLong << 32) | n else -1L
+  }
+
+  /** The tokens of `s`, each copied into its own `UTF8String`; called
+    * from generated code. */
+  def tokens(s: UTF8String): ArrayData = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var out = new Array[Any](16)
+    var count = 0
+    var t = nextToken(base, off, n, 0)
+    while (t >= 0) {
+      val start = (t >>> 32).toInt
+      val end = t.toInt
+      val bytes = new Array[Byte](end - start)
+      Platform.copyMemory(base, off + start, bytes,
+        Platform.BYTE_ARRAY_OFFSET, bytes.length)
+      if (count == out.length) {
+        val grown = new Array[Any](count * 2)
+        System.arraycopy(out, 0, grown, 0, count)
+        out = grown
+      }
+      out(count) = UTF8String.fromBytes(bytes)
+      count += 1
+      t = nextToken(base, off, n, end)
     }
     val exact = new Array[Any](count)
     System.arraycopy(out, 0, exact, 0, count)

@@ -8,14 +8,16 @@ import org.apache.spark.sql.graft.ColumnBridge
 /** The reference's entire pipeline (SURVEY.md §2 S1→T2→A3/X4→O5/O6/K7),
   * re-expressed declaratively so Catalyst plans it:
   *
-  *   scan → tokenize+explode (GenerateExec) → partial HashAggregate →
+  *   scan → fused tokenize+count ([[FusedWordCountExec]]: per-task
+  *   in-mapper counts over token byte slices) →
   *   shuffle(HashPartitioning(word)) → final HashAggregate →
   *   range-partitioned SortExec (for the sorted outputs) or
   *   TakeOrderedAndProject (for top-k).
   *
-  * The reference's per-thread maps / striped-mutex merge
-  * (main.cpp:111-138) are exactly Spark's partial+final agg and hash
-  * shuffle; nothing is hand-scheduled here. Frequency-sort ties are
+  * The reference's per-thread maps (main.cpp:68,73,111-113) are the
+  * fused operator's per-task tables; its striped-mutex merge
+  * (main.cpp:111-138) is Spark's hash shuffle and final aggregate.
+  * Nothing is hand-scheduled here. Frequency-sort ties are
   * broken `(cnt DESC, word ASC)` — the reference leaves tie order
   * nondeterministic (main.cpp:28,257), so this is a refinement.
   */
@@ -28,9 +30,20 @@ object WordCount {
   def words(df: DataFrame, text: Column): DataFrame =
     df.select(Tokenizer.explodeTokens(text).as("word"))
 
-  /** word -> cnt (A3 partial + X4 final aggregation). */
-  def counts(df: DataFrame, text: Column): DataFrame =
+  /** word -> cnt (A3 in-mapper counts + X4 final aggregation).
+    *
+    * The DataFrame is `words` grouped by `word` with `count(*)`; the
+    * physical plan counts in-mapper. This registers
+    * [[FusedWordCountStrategy]] with the session's planner (once, under
+    * a lock; a planner registration, not a conf change), which plans
+    * exactly this graft-specific shape, `count(1)` over
+    * `explode(graft_letter_tokens(text))`, as [[FusedWordCountExec]]
+    * under Spark's hash exchange and final aggregate. Every other plan,
+    * streaming ones included, is planned as before. */
+  def counts(df: DataFrame, text: Column): DataFrame = {
+    FusedWordCountStrategy.install(df.sparkSession)
     words(df, text).groupBy("word").agg(count("*").as("cnt"))
+  }
 
   /** Alphabetical output (O5): byte order on UTF8String = reference's
     * std::string operator< (both memcmp). */

@@ -22,13 +22,18 @@ object ColumnBridge {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
 
-  /** Apply a built `SparkSessionExtensions`' function registrations to
-    * a session — the same `registerFunctions` call
-    * `BaseSessionStateBuilder` makes when `spark.sql.extensions` names
-    * the class at session build; exposed so tests can exercise that
+  /** Apply a built `SparkSessionExtensions`' function registrations and
+    * planner strategies to a session — the `registerFunctions` and
+    * `buildPlannerStrategies` calls `BaseSessionStateBuilder` makes
+    * when `spark.sql.extensions` names the class at session build (the
+    * strategies land in `experimental.extraStrategies`, which the
+    * planner also tries first); exposed so tests can exercise that
     * path against a live session (static confs cannot be injected into
     * an already-running context). */
   def applyExtensions(spark: org.apache.spark.sql.SparkSession,
-      ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+      ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.registerFunctions(spark.sessionState.functionRegistry)
+    spark.experimental.extraStrategies =
+      ext.buildPlannerStrategies(spark) ++ spark.experimental.extraStrategies
+  }
 }

@@ -17,13 +17,13 @@ object KernelProps extends Properties("graft.kernels") {
     ' ', '\t', '-', '.', ',', '!', '0', '7', ';', '(')
   private val line: Gen[String] = Gen.listOf(
     Gen.frequency(3 -> wordChar, 1 -> delimChar)).map(_.mkString)
-  private val mixedText: Gen[String] = Gen.listOf(Gen.frequency(
+  private[graft] val mixedText: Gen[String] = Gen.listOf(Gen.frequency(
     6 -> Gen.alphaNumChar,
     2 -> Gen.oneOf(' ', '\t', '\n', '\r'),
     1 -> Gen.oneOf('!', '.', 'é', 'ß', '€', '-', '_'))).map(_.mkString)
   // like mixedText but with occasional astral-plane (non-BMP) chars —
   // the codepoint-vs-UTF-16 hazard surface
-  private val astralText: Gen[String] = Gen.listOf(Gen.frequency(
+  private[graft] val astralText: Gen[String] = Gen.listOf(Gen.frequency(
     6 -> Gen.alphaNumChar.map(_.toString),
     2 -> Gen.oneOf(" ", "\t", "\n"),
     1 -> Gen.oneOf("😀", "🤖", "𝕏", "é"))).map(_.mkString)
@@ -31,7 +31,7 @@ object KernelProps extends Properties("graft.kernels") {
   // letters and non-letters the ASCII generators never reach: combining
   // mark, Hebrew/Arabic/CJK letters, modifier and titlecase letters,
   // a letter-number, the ellipsis, digits, astral letter and emoji
-  private val unicodeText: Gen[String] = Gen.listOf(Gen.frequency(
+  private[graft] val unicodeText: Gen[String] = Gen.listOf(Gen.frequency(
     4 -> Gen.alphaChar.map(_.toString),
     2 -> Gen.oneOf(" ", "\t", "-", "0", "7", ".", "\u000B"),
     3 -> Gen.oneOf("\u0301", "\u05D0", "\u05E9", "\u0628", "\u0645",
@@ -40,7 +40,7 @@ object KernelProps extends Properties("graft.kernels") {
     .map(_.mkString)
   // byte strings, malformed UTF-8 included: random bytes, whole
   // encodings of random code points, and truncated encodings
-  private val utf8ish: Gen[Array[Byte]] = {
+  private[graft] val utf8ish: Gen[Array[Byte]] = {
     val codePoint = Gen.frequency(
       3 -> Gen.choose(0x80, 0xD7FF), 1 -> Gen.choose(0xE000, 0x10FFFF))
     val enc = codePoint.map(cp => new String(Character.toChars(cp))

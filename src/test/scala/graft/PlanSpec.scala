@@ -1,14 +1,18 @@
 package graft
 
 import graft.functions.LetterTokens
-import graft.operators.{Dedup, RelationalOps, Similarity, WordCount}
+import graft.operators.{Dedup, FusedWordCountExec, RelationalOps, Similarity, WordCount}
 import graft.sources.Tables.{documents, embeddings, table}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.expressions.Explode
-import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the 100 TB posture, pinned.
@@ -35,39 +39,77 @@ class PlanSpec extends SparkSpec {
       s"scan is not pruned to text:\n$p")
   }
 
-  test("word count aggregates partially before the exchange") {
-    val p = plan(WordCount.counts(documents(spark, sfDir), col("text")))
-    val firstAgg = p.indexOf("HashAggregate")
-    val exchange = p.indexOf("Exchange hashpartitioning")
-    assert(firstAgg >= 0 && exchange >= 0,
-      s"expected hash agg + hash exchange in:\n$p")
-    // partial agg appears below (after, in toString order) the exchange;
-    // final agg above — i.e. two HashAggregates around one exchange
-    assert(p.indexOf("HashAggregate", firstAgg + 1) >= 0,
-      s"expected partial+final HashAggregate pair in:\n$p")
+  /** The un-executed physical plan: AQE's initial plan, exchanges in. */
+  private def initialPlan(df: DataFrame) = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case other => other
   }
 
-  test("word count: one Generate over the letter kernel, no regex split, " +
-      "no Filter before the partial aggregate") {
+  test("word count: one fused tokenize-count node feeds the hash exchange") {
     val df = SparkEntry.queries("q_wordcount_freq")(spark, sfDir)
     val p = plan(df)
     assert(!p.contains("split("), s"regex split in:\n$p")
-    val root = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
-      case other => other
+    assert(!p.contains("!"), s"missing-input marker in:\n$p")
+    val root = initialPlan(df)
+    assert(root.collect { case g: GenerateExec => g }.isEmpty,
+      s"Generate left in:\n$p")
+    val fused = root.collect { case f: FusedWordCountExec => f }
+    assert(fused.size == 1, s"expected one fused node in:\n$p")
+    val exchange = root.collect {
+      case e: ShuffleExchangeExec if e.child eq fused.head => e
     }
-    val gens = root.collect { case g: GenerateExec => g }
-    assert(gens.size == 1, s"expected one Generate in:\n$p")
-    assert(gens.head.generator match {
-      case e: Explode => e.child.isInstanceOf[LetterTokens]
-      case _ => false
-    }, s"Generate is not explode(graft_letter_tokens) in:\n$p")
-    val parent = root.find(_.children.exists(_ eq gens.head))
-    assert(parent.exists {
-      case h: HashAggregateExec =>
-        h.aggregateExpressions.forall(_.mode == Partial)
-      case _ => false
-    }, s"Generate does not feed the partial HashAggregate in:\n$p")
+    assert(exchange.size == 1 &&
+      exchange.head.outputPartitioning.isInstanceOf[HashPartitioning],
+      s"fused node is not the hash Exchange's child in:\n$p")
+    val finalAgg = root.collect {
+      case h: HashAggregateExec if h.child eq exchange.head => h
+    }
+    assert(finalAgg.size == 1 &&
+      finalAgg.head.aggregateExpressions.forall(_.mode == Final),
+      s"no final HashAggregate over the exchange in:\n$p")
+    // the fused node emits exactly the partial aggregate's output: the
+    // word and the count buffer the final aggregate merges
+    val buffer = finalAgg.head.aggregateExpressions.flatMap(
+      _.aggregateFunction.inputAggBufferAttributes)
+    assert(fused.head.output == finalAgg.head.groupingExpressions ++ buffer,
+      s"fused output ${fused.head.output} is not the partial count in:\n$p")
+  }
+
+  test("case-folded and heavy-hitter word counts keep their Generate") {
+    Seq(WordCount.byFrequencyFolded(documents(spark, sfDir), col("text")),
+        WordCount.heavyHitters(documents(spark, sfDir), col("text"), 64))
+      .foreach { df =>
+        val root = initialPlan(df)
+        val tokenize = root.collect {
+          case g @ GenerateExec(Explode(_: LetterTokens), _, _, _, _) => g
+        }
+        assert(tokenize.size == 1,
+          s"expected one Generate over the letter kernel in:\n$root")
+        assert(root.collect { case f: FusedWordCountExec => f }.isEmpty,
+          s"fused node in a shape it does not match:\n$root")
+      }
+  }
+
+  test("streamed word count keeps its stateful aggregate, unfused") {
+    val input = MemoryStream[String](Encoders.STRING, spark.sqlContext)
+    val q = graft.streaming.EventStreams.wordCountStream(input.toDF())
+      .writeStream.format("memory").queryName("plan_spec_wc_stream")
+      .outputMode("complete").start()
+    try {
+      input.addData("a b a", "c")
+      q.processAllAvailable()
+      val p = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      assert(p.collect { case s: StateStoreSaveExec => s }.size == 1,
+        s"no stateful aggregate in:\n$p")
+      assert(p.collect { case g: GenerateExec => g }.size == 1,
+        s"expected the Generate in:\n$p")
+      assert(p.collect { case f: FusedWordCountExec => f }.isEmpty,
+        s"fused node in a micro-batch plan:\n$p")
+      val got = spark.table("plan_spec_wc_stream").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
+    } finally q.stop()
   }
 
   test("dimension-chain join broadcasts, never shuffles the fact table") {

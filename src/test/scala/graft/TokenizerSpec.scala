@@ -153,10 +153,14 @@ class TokenizerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
     // repartition: keep the Generate out of a local-relation fold
     val df = lines.toDF("text").repartition(2)
+    // counts run the fused in-mapper operator; the Generate over the
+    // kernel, and so the codegen check, lives on in WordCount.words
     def run(): (Map[String, Long], Boolean) = {
       val counts = WordCount.counts(df, col("text"))
       val rows = counts.collect().map(r => r.getString(0) -> r.getLong(1))
-      val fused = collect(counts.queryExecution.executedPlan) {
+      val words = WordCount.words(df, col("text"))
+      assert(words.collect().length == want.values.sum)
+      val fused = collect(words.queryExecution.executedPlan) {
         case w: WholeStageCodegenExec
             if w.find(_.isInstanceOf[GenerateExec]).isDefined => w
       }.nonEmpty
