@@ -6,8 +6,9 @@ import graft.sources.Tables.{documents, embeddings, table}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.expressions.Explode
 import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -45,14 +46,12 @@ class PlanSpec extends SparkSpec {
     case other => other
   }
 
-  test("word count: one fused tokenize-count node feeds the hash exchange") {
+  test("word count aggregates partially before the exchange") {
     val df = SparkEntry.queries("q_wordcount_freq")(spark, sfDir)
     val p = plan(df)
-    assert(!p.contains("split("), s"regex split in:\n$p")
-    assert(!p.contains("!"), s"missing-input marker in:\n$p")
     val root = initialPlan(df)
-    assert(root.collect { case g: GenerateExec => g }.isEmpty,
-      s"Generate left in:\n$p")
+    // the partial count is the fused tokenize-count node, the hash
+    // Exchange's child; the final HashAggregate sits over the exchange
     val fused = root.collect { case f: FusedWordCountExec => f }
     assert(fused.size == 1, s"expected one fused node in:\n$p")
     val exchange = root.collect {
@@ -73,6 +72,36 @@ class PlanSpec extends SparkSpec {
       _.aggregateFunction.inputAggBufferAttributes)
     assert(fused.head.output == finalAgg.head.groupingExpressions ++ buffer,
       s"fused output ${fused.head.output} is not the partial count in:\n$p")
+  }
+
+  test("word count: one Generate over the letter kernel, no regex split, " +
+      "no Filter before the partial aggregate") {
+    val df = SparkEntry.queries("q_wordcount_freq")(spark, sfDir)
+    val p = plan(df)
+    assert(!p.contains("split("), s"regex split in:\n$p")
+    assert(!p.contains("!"), s"missing-input marker in:\n$p")
+    // logically: one explode(graft_letter_tokens) straight under the
+    // count aggregate — the shape FusedWordCountStrategy fuses
+    val logical = df.queryExecution.optimizedPlan
+    val gens = logical.collect { case g: Generate => g }
+    assert(gens.size == 1, s"expected one Generate in:\n$logical")
+    assert(gens.head.generator match {
+      case e: Explode => e.child.isInstanceOf[LetterTokens]
+      case _ => false
+    }, s"Generate is not explode(graft_letter_tokens) in:\n$logical")
+    assert(logical.find(_.children.exists(_ eq gens.head)).exists {
+      case _: Aggregate => true
+      case _ => false
+    }, s"Generate does not feed the aggregate in:\n$logical")
+    // physically: the fused node is the partial aggregate and tokenizes
+    // in place, so no Generate survives and no Filter sits below it
+    val root = initialPlan(df)
+    assert(root.collect { case g: GenerateExec => g }.isEmpty,
+      s"Generate left in:\n$p")
+    val fused = root.collect { case f: FusedWordCountExec => f }
+    assert(fused.size == 1, s"expected one fused node in:\n$p")
+    assert(fused.head.collect { case f: FilterExec => f }.isEmpty,
+      s"Filter before the fused partial count in:\n$p")
   }
 
   test("case-folded and heavy-hitter word counts keep their Generate") {
