@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the headline queries — the
   * plan-review artifact behind PLANS.md (PlanSpec asserts the
   * load-bearing shapes; this is the human-readable form).
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    // same knobs as Verify so plan snapshots match verification runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Verify.session()
     spark.sparkContext.setLogLevel("ERROR")
     val headline = Seq(
       "q_wordcount_freq", "q_rel_pricing", "q_rel_topn", "q_rel_nation_rev",

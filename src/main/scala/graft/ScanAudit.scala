@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit sweep: for every harness query, count the physical
   * operators that dominate cost at 100 TB — FileScan (how many times
   * the raw tables are read), Generate (tokenize/explode passes), and
@@ -20,13 +18,7 @@ import org.apache.spark.sql.SparkSession
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Verify.session()
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"query"}%-28s scans gens exchanges")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1834,9 +1834,9 @@ object SparkEntry {
     // raw top-k (whose oracle would have to replay engine-specific
     // SRP hashes — that exactness lives in q_ann_lsh_injected), the
     // relation IS the quality check: per-query recall@10 vs the
-    // in-plan brute-force ranking, gated at floors measured by
-    // AnnRecallProbe (PERF.md §"ANN recall floors": per-query min
-    // 5000 bp, panel mean ≥ 7800 bp across all three SFs). Estimator
+    // in-plan brute-force ranking, gated at measured floors (PERF.md
+    // §"ANN recall floors": per-query min 5000 bp, panel mean ≥ 7800 bp
+    // across all three SFs; SimilaritySpec pins them). Estimator
     // drift now surfaces as a hash mismatch, not a no_oracle blind
     // spot.
     "q_ann_lsh" -> ((s, dir) => {
@@ -1862,10 +1862,11 @@ object SparkEntry {
         k = 10)),
     // Trained-IVF face as a bounded-error GATE (the q_ann_lsh
     // convention; r13 verdict item 2): recall@10 vs the in-plan
-    // brute-force ranking, floors measured by AnnRecallProbe
-    // (PERF.md: per-query min 1000 bp at sf0.01, panel mean
-    // 5000–5200 bp at every SF). Centroids are trained once per
-    // dataset and cached (retraining k-means per call would pay
+    // brute-force ranking, floors measured in PERF.md §"ANN recall
+    // floors" and pinned by SimilaritySpec: the per-query floor of
+    // 1000 bp EQUALS the measured minimum at sf0.01 (zero margin), the
+    // panel mean is 5000–5200 bp at every SF. Centroids are trained
+    // once per dataset and cached (retraining k-means per call would pay
     // 1+iters full-corpus jobs per query; a real deployment trains
     // the index once and serves many queries from it). The exact
     // top-k oracle shape lives in q_ann_ivf_injected.
@@ -1944,8 +1945,8 @@ object SparkEntry {
     // Trained-PQ face as a bounded-error GATE (the q_ann_lsh
     // convention; r13 verdict item 2): compressed-domain ADC scan +
     // exact re-rank, gated on recall@10 vs the in-plan brute-force
-    // ranking (AnnRecallProbe floors: per-query min 3000 bp, panel
-    // mean 4400–6400 bp). Codebooks cached like IVF's centroids; the
+    // ranking (measured floors, PERF.md §"ANN recall floors":
+    // per-query min 3000 bp, panel mean 4400–6400 bp). Codebooks cached like IVF's centroids; the
     // exact ADC-machinery oracle lives in q_ann_pq_injected.
     "q_ann_pq" -> ((s, dir) => {
       val cbs = pqCodebookCache.computeIfAbsent(dir, d =>
@@ -4135,8 +4136,9 @@ object SparkEntry {
     // booleans; the oracle replays the exact side (the query panel)
     // and expects every gate TRUE — so a recall regression is a hash
     // mismatch, while sketch/index internals stay engine-local.
-    // Floors are measured constants (AnnRecallProbe; PERF.md §"ANN
-    // recall floors").
+    // Floors are measured constants (PERF.md §"ANN recall floors",
+    // pinned by SimilaritySpec at sf0.001 and sf0.01); the IVF
+    // per-query floor equals its sf0.01 minimum, with no margin.
     "q_ann_lsh" -> AnnGateOracle,
     "q_ann_ivf" -> AnnGateOracle,
     "q_ann_pq" -> AnnGateOracle,

@@ -124,9 +124,7 @@ object Clustering {
     * default for near-dup graphs, whose tiny diameter converges in
     * fewer total shuffles. */
   def alternatingStar(edges: DataFrame, nodes: DataFrame,
-      maxIter: Int = 25,
-      roundCounter: Option[java.util.concurrent.atomic.AtomicInteger] =
-        None): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     def minOverNeighborhood(e: DataFrame, includeSelf: Boolean): DataFrame = {
       val m = e.groupBy("a")
         .agg((if (includeSelf) least(min("b"), col("a"))
@@ -166,12 +164,10 @@ object Clustering {
       e = next
       round += 1
     }
+    // the round count is the algorithm's cost model: ClusteringSpec
+    // pins a path graph to converge within ceil(log2 n) + 2 rounds
     require(converged,
       s"alternatingStar did not converge in $maxIter rounds")
-    // observed-round instrumentation for the scale rehearsal and the
-    // O(log n) bound spec — the algorithm's cost model IS its round
-    // count, so the rehearsal reports it alongside wall time
-    roundCounter.foreach(_.set(round))
     // fixpoint is a star forest: every node points at its component
     // min; nodes absent from any edge are their own component.
     // Same label universe as connectedComponents: nodes ∪ endpoints.

@@ -28,6 +28,12 @@ import org.apache.spark.sql.functions._
   *     functions in the hot path.
   */
 object Dedup {
+  /** Id shift of every planted row in the harness fixtures
+    * ([[plantNearDups]], [[plantCrossSourceDups]], [[splitIncremental]],
+    * `MultiModal.imageDupQuery`): planted ids are real ids + this
+    * (or + 2x it). The oracle SQL in `SparkEntry` hardcodes the same
+    * +1000000 / +2000000, so it is one constant, not a parameter. */
+  val PLANTED_ID_OFFSET = 1000000L
 
   /** Exact dedup by content fingerprint: one row per distinct text,
     * keeping the smallest doc_id (deterministic survivor). */
@@ -790,24 +796,24 @@ object Dedup {
     * stay below 0.9 (base max cos 0.6 moves only ~±0.03). Emitted in
     * DOUBLE precision so the DuckDB oracle reproduces the planted
     * vectors bit-for-bit. */
-  def plantNearDups(embs: DataFrame, every: Int = 5,
-      idOffset: Long = 1000000L): DataFrame = {
+  def plantNearDups(embs: DataFrame, every: Int = 5): DataFrame = {
     val e = embs.select(col("vec_id"),
       Vectors.toDoubleVec(col("embedding")).as("embedding"))
-    // If a base id ever reached idOffset (bigger scale factor than this
-    // fixture was tuned for), planted ids would collide with real ones
-    // and CORRUPT the planted-pair invariant — and the DuckDB oracle,
-    // replicating the same arithmetic, would agree with the corruption
-    // rather than catch it. Failing here is the only visible signal.
+    // If a base id ever reached PLANTED_ID_OFFSET (bigger scale factor
+    // than this fixture was tuned for), planted ids would collide with
+    // real ones and CORRUPT the planted-pair invariant — and the DuckDB
+    // oracle, replicating the same arithmetic, would agree with the
+    // corruption rather than catch it. Failing here is the only
+    // visible signal.
     // Cost: one single-column max agg — this is a test-fixture builder,
     // not a production operator.
     val maxRow = e.agg(max(col("vec_id"))).head
     val maxId = if (maxRow.isNullAt(0)) Long.MinValue else maxRow.getLong(0)
-    require(maxId < idOffset,
-      s"plantNearDups: max(vec_id)=$maxId >= idOffset=$idOffset — planted " +
-        "ids would collide with real ids; raise idOffset past the corpus")
+    require(maxId < PLANTED_ID_OFFSET,
+      s"plantNearDups: max(vec_id)=$maxId >= PLANTED_ID_OFFSET=" +
+        s"$PLANTED_ID_OFFSET — planted ids would collide with real ids")
     val planted = e.filter(pmod(col("vec_id"), lit(every)) === 0)
-      .select((col("vec_id") + idOffset).as("vec_id"),
+      .select((col("vec_id") + PLANTED_ID_OFFSET).as("vec_id"),
         zip_with(col("embedding"), reverse(col("embedding")),
           (a, b) => a * lit(0.97) + b * lit(0.03)).as("embedding"))
     e.unionByName(planted)
@@ -1101,18 +1107,17 @@ object Dedup {
     * doc_id % 13 == 0 doc (WITHIN-source pairs bind). Integer
     * arithmetic only, so a SQL oracle replays the plant exactly; same
     * id-collision guard convention as [[splitIncremental]]. */
-  def plantCrossSourceDups(docs: DataFrame,
-      idOffset: Long = 1000000L): DataFrame = {
+  def plantCrossSourceDups(docs: DataFrame): DataFrame = {
     val maxRow = docs.agg(max(col("doc_id"))).head
     val maxId = if (maxRow.isNullAt(0)) Long.MinValue else maxRow.getLong(0)
-    require(maxId < idOffset,
-      s"plantCrossSourceDups: max(doc_id)=$maxId >= idOffset=$idOffset — " +
-        "planted ids would collide with real ids; raise idOffset")
+    require(maxId < PLANTED_ID_OFFSET,
+      s"plantCrossSourceDups: max(doc_id)=$maxId >= PLANTED_ID_OFFSET=" +
+        s"$PLANTED_ID_OFFSET — planted ids would collide with real ids")
     val mirrored = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-      .withColumn("doc_id", col("doc_id") + idOffset)
+      .withColumn("doc_id", col("doc_id") + PLANTED_ID_OFFSET)
       .withColumn("source", lit("mirror"))
     val redelivered = docs.filter(pmod(col("doc_id"), lit(13)) === 0)
-      .withColumn("doc_id", col("doc_id") + 2 * idOffset)
+      .withColumn("doc_id", col("doc_id") + 2 * PLANTED_ID_OFFSET)
     docs.unionByName(mirrored).unionByName(redelivered)
   }
 
@@ -1279,24 +1284,23 @@ object Dedup {
     * the doc_id % 4 == 0 slice (genuinely new content) PLUS two kinds
     * of planted duplicates so both drop paths of [[incrementalExact]]
     * demonstrably bind: re-keyed copies of new docs (doc_id % 5 == 0,
-    * +`idOffset`) — within-batch dups — and re-deliveries of base docs
-    * (doc_id % 7 == 1, +2*`idOffset`) — the re-crawl case. All
+    * +[[PLANTED_ID_OFFSET]]) — within-batch dups — and re-deliveries of
+    * base docs (doc_id % 7 == 1, +2x it) — the re-crawl case. All
     * arithmetic is integer, so a SQL oracle reproduces the split
     * exactly. Fails loudly (like [[plantNearDups]]) if real ids ever
-    * reach `idOffset`, where planted ids would collide. */
-  def splitIncremental(docs: DataFrame,
-      idOffset: Long = 1000000L): (DataFrame, DataFrame) = {
+    * reach [[PLANTED_ID_OFFSET]], where planted ids would collide. */
+  def splitIncremental(docs: DataFrame): (DataFrame, DataFrame) = {
     val maxRow = docs.agg(max(col("doc_id"))).head
     val maxId = if (maxRow.isNullAt(0)) Long.MinValue else maxRow.getLong(0)
-    require(maxId < idOffset,
-      s"splitIncremental: max(doc_id)=$maxId >= idOffset=$idOffset — " +
-        "planted ids would collide with real ids; raise idOffset")
+    require(maxId < PLANTED_ID_OFFSET,
+      s"splitIncremental: max(doc_id)=$maxId >= PLANTED_ID_OFFSET=" +
+        s"$PLANTED_ID_OFFSET — planted ids would collide with real ids")
     val base = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
     val fresh = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
     val dupNew = fresh.filter(pmod(col("doc_id"), lit(5)) === 0)
-      .withColumn("doc_id", col("doc_id") + idOffset)
+      .withColumn("doc_id", col("doc_id") + PLANTED_ID_OFFSET)
     val redelivered = base.filter(pmod(col("doc_id"), lit(7)) === 1)
-      .withColumn("doc_id", col("doc_id") + 2 * idOffset)
+      .withColumn("doc_id", col("doc_id") + 2 * PLANTED_ID_OFFSET)
     (base, fresh.unionByName(dupNew).unionByName(redelivered))
   }
 }

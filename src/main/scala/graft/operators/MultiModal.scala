@@ -455,12 +455,12 @@ object MultiModal {
 
   /** Harness fixture + query: perceptual near-dup pairs over the text
     * payloads with planted one-character edits (doc_id % 5 == 0,
-    * re-keyed +1e6 — a tiny edit moves one box average, flipping at
-    * most a couple of comparison bits, the exact case dHash exists to
-    * catch; integer plant, SQL-replayable). */
-  def imageDupQuery(docs: DataFrame, idOffset: Long = 1000000L): DataFrame = {
+    * re-keyed +[[Dedup.PLANTED_ID_OFFSET]] — a tiny edit moves one box
+    * average, flipping at most a couple of comparison bits, the exact
+    * case dHash exists to catch; integer plant, SQL-replayable). */
+  def imageDupQuery(docs: DataFrame): DataFrame = {
     val perturbed = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      .withColumn("doc_id", col("doc_id") + idOffset)
+      .withColumn("doc_id", col("doc_id") + Dedup.PLANTED_ID_OFFSET)
       .withColumn("text", concat(substring(col("text"), 1, 36), lit("Q"),
         expr("substring(text, 38)")))
     dHashPairs(textDHashes(docs.select("doc_id", "text")

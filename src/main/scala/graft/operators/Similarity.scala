@@ -97,12 +97,13 @@ object Similarity {
     * the exact side (the query panel itself) replays in any engine,
     * and the booleans turn estimator drift into a hash mismatch —
     * the harness convention for every trained/approximate operator
-    * (q_ann_ivf/lsh/pq). Floors sit under the measured recall
-    * (graft.AnnRecallProbe, PERF.md §"ANN recall floors") so they
-    * trip on regressions, not noise: the trained artifacts are
-    * seed-deterministic, so measured recall per (dataset, family) is
-    * a constant. The mean aggregate is one row over the ≤|queries|
-    * panel — broadcast back, no second corpus pass. */
+    * (q_ann_ivf/lsh/pq). Floors sit at or under the measured recall
+    * (PERF.md §"ANN recall floors"; SimilaritySpec pins them at
+    * sf0.001 and sf0.01) so they trip on regressions, not noise: the
+    * trained artifacts are seed-deterministic, so measured recall per
+    * (dataset, family) is a constant. The mean aggregate is one row
+    * over the ≤|queries| panel — broadcast back, no second corpus
+    * pass. */
   def recallGate(embs: DataFrame, approx: DataFrame, queryPred: Column,
       k: Int, floorBp: Int, meanFloorBp: Int): DataFrame = {
     val r = recallAtK(embs, approx, queryPred, k)

@@ -156,9 +156,8 @@ object AnnIndexStore {
     * higher than the text/fingerprint families' knee of 4 because the
     * IVF-PQ probe amortizes per-segment pruned scans against its
     * fixed rerank-join floor: the measured curve (PERF.md §"Compaction
-    * trigger policy", StoredIndexRehearsal ivfpq
-    * `seg_probe_n{1,2,4,8,16}` at two decades) is FLAT through 8
-    * segments and +55% at 16. */
+    * trigger policy", IVF-PQ probes over 1, 2, 4, 8 and 16 segments at
+    * two decades) is FLAT through 8 segments and +55% at 16. */
   val DefaultMaxSegments = 8
 
   /** [[compactSegments]] for a stored IVF-PQ index — the code

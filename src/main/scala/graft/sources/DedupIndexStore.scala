@@ -281,8 +281,8 @@ object DedupIndexStore {
   }
 
   /** Segment-count ceiling the maintenance loops check after every
-    * append (PERF.md §"Compaction trigger policy", StoredIndexRehearsal
-    * `seg_probe_n{1,2,4,8,16}`, post-hazard-fix ladders at three
+    * append (PERF.md §"Compaction trigger policy": probes over 1, 2,
+    * 4, 8 and 16 segments, post-hazard-fix ladders at three
     * decades). The measured probe-cost knee belongs to POSTINGS —
     * the one family whose probes pay one bucket-pruned catalog scan
     * per segment per slot: flat floor through 4 segments, slope at

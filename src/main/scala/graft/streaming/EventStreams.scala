@@ -513,47 +513,6 @@ object EventStreams extends Serializable {
     out
   }
 
-  /** REHEARSAL-ONLY sink shape for CORPUS-SCALE stream outputs:
-    * replay `batch` as micro-batches through `transform` and drive
-    * the stream with foreachBatch + per-batch count — every output
-    * row is materialized on the EXECUTORS and never collected to the
-    * driver. The memory-sink drains above are bounded-output HARNESS
-    * tooling (they copy the result into driver memory twice — sink
-    * table + LocalRelation); an output that is itself corpus-scale
-    * (the exact-dedup survivors: most of the ingest) belongs to the
-    * exactly-once parquet sink in a deployment, and to this shape in
-    * a scale rehearsal — the 100x run that OOMed the driver through
-    * the memory sink is exactly the wall this exists to avoid.
-    * Returns total output rows; checkpoints created by `transform`
-    * (the static index relations) are released before returning. */
-  private[graft] def replayThroughCountSink(batch: DataFrame,
-      idCol: String, transform: DataFrame => DataFrame,
-      nBatches: Int = 3,
-      tail: Option[DataFrame] = None,
-      mode: OutputMode = OutputMode.Append()): Long = {
-    val spark = batch.sparkSession
-    val acc = spark.sparkContext.longAccumulator("graft_rehearsal_rows")
-    val (_, created) = graft.operators.CheckpointScope.collect {
-      val (stream, tmp) = replayAsMicroBatches(batch, idCol, nBatches,
-        tail)
-      try {
-        val q = transform(stream).writeStream
-          .foreachBatch {
-            (df: org.apache.spark.sql.Dataset[
-               org.apache.spark.sql.Row], _: Long) =>
-              acc.add(df.count())
-          }
-          .outputMode(mode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally deleteReplayDir(tmp)
-    }
-    created.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-      .foreach(_.unpersist(blocking = false)))
-    acc.value
-  }
-
   def drainIncrementalDedup(base: DataFrame, batch: DataFrame,
       nBatches: Int = 3): DataFrame = {
     val (stream, tmp) = replayForDrain(batch, "doc_id", nBatches)
@@ -1725,33 +1684,6 @@ object EventStreams extends Serializable {
         .join(folded, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("doc_id").as("cluster")))
       .orderBy("doc_id")
-  }
-
-  /** REHEARSAL-ONLY corpus-scale shape of [[drainClusterMap]] (the
-    * [[replayThroughCountSink]] convention): same replay + foreachBatch
-    * fold loop, but the final map is COUNTED on the executors — a 100x
-    * cluster map is corpus-sized and must never be collected; a
-    * deployment MERGEs each fold into its stored table instead.
-    * Returns (final map rows, persistent RDDs still pinned AFTER
-    * release) — the second value is the block-accumulation check: the
-    * rolling localCheckpoint must release every predecessor, so the
-    * delta over the run's start should be 0. */
-  private[graft] def rehearseClusterMapFold(baseAssign: DataFrame,
-      deltaEdges: DataFrame, nBatches: Int = 3): (Long, Int) = {
-    val sc = baseAssign.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.size
-    val state = new ClusterMapState(baseAssign.toDF("id", "cluster"))
-    val (stream, tmp) =
-      replayAsMicroBatches(deltaEdges.toDF("a", "b"), "a", nBatches)
-    try {
-      val q = clusterMapStream(stream, state)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteReplayDir(tmp)
-    val n = state.current.count()
-    state.release()
-    (n, sc.getPersistentRDDs.size - before)
   }
 
   /** Wire an edge stream into a [[ClusterMapState]] — one

@@ -26,11 +26,16 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("alternating star equals label propagation on chains and random graphs") {
-    val chainE = (0L until 29L).map(i => (i, i + 1)).toDF("a", "b")
-    val chainN = (0L to 29L).toDF("id")
-    val viaStar = Clustering.alternatingStar(chainE, chainN)
+    // a path graph is label propagation's worst case (n - 1 rounds);
+    // the star scheme's round count is O(log n), so a budget of
+    // ceil(log2 n) + 2 holds it and the require inside fails otherwise
+    val n = 128
+    val maxIter = math.ceil(math.log(n.toDouble) / math.log(2.0)).toInt + 2
+    val chainE = (0L until n - 1L).map(i => (i, i + 1)).toDF("a", "b")
+    val chainN = (0L until n.toLong).toDF("id")
+    val viaStar = Clustering.alternatingStar(chainE, chainN, maxIter = maxIter)
       .as[(Long, Long)].collect().toMap
-    assert(viaStar.values.forall(_ == 0L) && viaStar.size == 30)
+    assert(viaStar.values.forall(_ == 0L) && viaStar.size == n)
     // seeded random graphs: same components from both algorithms
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)

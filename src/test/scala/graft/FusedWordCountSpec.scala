@@ -11,13 +11,16 @@ import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructTy
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Minutes, Span}
 
 /** The fused in-mapper word count ([[FusedWordCountExec]]) against a
   * driver-side reference: each line decoded and split on
   * `Tokenizer.DelimiterRegex`, counted in Scala. Lines are raw bytes
   * (cast to string in the query), drawn from [[KernelProps]]'
   * generators with fixed seeds. */
-class FusedWordCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class FusedWordCountSpec extends SparkSpec with AdaptiveSparkPlanHelper
+    with TimeLimits {
 
   private def sample[T](g: Gen[T], n: Int, seed: Long): Seq[T] =
     Seq.tabulate(n)(i => g.pureApply(Gen.Parameters.default, Seed(seed + i)))
@@ -119,7 +122,20 @@ class FusedWordCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         case f: FusedWordCountExec => f.copy(maxSlots = 4)
       }
       val node = fused(tiny).head
-      assert(answer(tiny.executeCollect().toSeq.map(r =>
+      // a table that is never cleared re-emits its records forever:
+      // past the bound, cancel the run's jobs so the test fails instead
+      // of hanging the suite
+      val sc = spark.sparkContext
+      val group = "fused-forced-flush"
+      implicit val signaler: Signaler = { t =>
+        sc.cancelJobGroup(group)
+        ThreadSignaler(t)
+      }
+      val out = try {
+        sc.setJobGroup(group, "4-slot forced-flush run", interruptOnCancel = true)
+        failAfter(Span(2, Minutes))(tiny.executeCollect())
+      } finally sc.clearJobGroup()
+      assert(answer(out.toSeq.map(r =>
         Row(r.getUTF8String(0).toString, r.getLong(1)))) == reference(corpus))
       val m = node.metrics
       assert(m("numFlushes").value > 100)

@@ -638,23 +638,33 @@ class SimilaritySpec extends SparkSpec {
 
   test("recallGate floors hold for the trained families at this SF " +
       "(the q_ann_{ivf,lsh,pq} harness floors)") {
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val ev = e.select(col("vec_id"),
-      Vectors.toDoubleVec(col("embedding")).as("v"))
-    val pred = col("vec_id") < 5
-    val cents = Similarity.ivfCentroids(ev, nCells = 16, iters = 2)
-    val cbs = Similarity.pqCodebooks(ev, m = 8, k = 16, dim = 64)
-    val fams = Seq(
-      ("ivf", Similarity.ivfTopK(e, pred, 10, centroids = Some(cents)),
-        1000, 3000),
-      ("lsh", Similarity.lshTopK(e, pred, 10), 3000, 5000),
-      ("pq", Similarity.pqTopK(e, pred, 10, codebooks = Some(cbs)),
-        2000, 3000))
-    fams.foreach { case (name, approx, floor, meanFloor) =>
-      val g = Similarity.recallGate(e, approx, pred, 10, floor, meanFloor)
-        .as[(Long, Boolean, Boolean)].collect().toSeq
-      assert(g.forall(x => x._2 && x._3),
-        s"$name gate tripped below its measured floor: $g")
+    // both oracle scale factors: the trained artifacts are
+    // seed-deterministic, so per-query recall is a constant per
+    // (SF, family), and PERF.md §"ANN recall floors" lists it
+    for (dir <- Seq(sfDir, "/root/testdata/sf0.01")) {
+      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val ev = e.select(col("vec_id"),
+        Vectors.toDoubleVec(col("embedding")).as("v"))
+      val pred = col("vec_id") < 5
+      val cents = Similarity.ivfCentroids(ev, nCells = 16, iters = 2)
+      val cbs = Similarity.pqCodebooks(ev, m = 8, k = 16, dim = 64)
+      val fams = Seq(
+        ("ivf", Similarity.ivfTopK(e, pred, 10, centroids = Some(cents)),
+          1000, 3000),
+        ("lsh", Similarity.lshTopK(e, pred, 10), 3000, 5000),
+        ("pq", Similarity.pqTopK(e, pred, 10, codebooks = Some(cbs)),
+          2000, 3000))
+      fams.foreach { case (name, approx, floor, meanFloor) =>
+        val g = Similarity.recallGate(e, approx, pred, 10, floor, meanFloor)
+          .as[(Long, Boolean, Boolean)].collect().toSeq
+        if (!g.forall(x => x._2 && x._3)) {
+          val bp = Similarity.recallAtK(e, approx, pred, 10)
+            .as[(Long, Long)].collect()
+            .map { case (q, r) => s"q$q=$r" }.mkString(" ")
+          fail(s"$dir $name gate tripped (floor $floor bp, mean floor " +
+            s"$meanFloor bp): recall_bp $bp; gate $g")
+        }
+      }
     }
   }
 }

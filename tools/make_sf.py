@@ -18,11 +18,11 @@ into a semantics change. So:
               WITHIN-replica shingle structure (planted dup families)
               is preserved exactly while CROSS-replica jaccard is ~0
               at ANY REP <= 17576; n_chars recomputed.
-  embeddings  vec_id + k*1e5 (stays < plantNearDups' 1e6 idOffset
+  embeddings  vec_id + k*1e5 (stays < Dedup.PLANTED_ID_OFFSET, 1e6,
               only while REP <= 10 — at larger REP the shifted ids
-              reach 1e6 and plantNearDups' idOffset require aborts
-              loudly; a large-REP embedding-dedup set must raise
-              that offset at the call site);
+              reach 1e6 and plantNearDups' collision require aborts
+              loudly; the oracle SQL hardcodes the same offset, so
+              the embedding-dedup rows need REP <= 10);
               vectors np.roll'ed by k then sign-flipped by a
               deterministic per-(replica, dim) +-1 pattern (r10 fix:
               a bare roll wraps at dim=64, making replicas 64 apart
