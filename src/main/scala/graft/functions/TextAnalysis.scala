@@ -42,17 +42,11 @@ object TextAnalysis {
   def wsTokens(text: Column): Column =
     regexp_extract_all(text, lit(WsTokenRegex), lit(0))
 
-  def bpeTokens(text: Column): Column =
-    regexp_extract_all(text, lit(BpeTokenRegex), lit(0))
-
   /** Token counts via regexp_count: no token-array materialization —
     * one codegen'd scan per count (the extract_all + size route
     * allocates every token string just to count them). */
   def tokenCountWs(text: Column): Column =
     regexp_count(text, lit(WsTokenRegex))
-
-  def tokenCountBpe(text: Column): Column =
-    regexp_count(text, lit(BpeTokenRegex))
 
   /** Number of tokens contained in `words` (multiset count). */
   def stopwordCount(tokens: Column, words: Seq[String]): Column =

@@ -713,15 +713,12 @@ object Dedup {
     * materialize-once relation both incremental faces probe. */
   def simhashBandIndex(base: DataFrame,
       maxBucket: Int = 65535): DataFrame =
-    simhashKernel(base, bits = 60, portable = true)
-      .select(col("doc_id"), col("simhash"),
-        posexplode(simhashBandCols(col("simhash"))))
-      .toDF("doc_base", "sh_base", "band", "key")
-      .groupBy("band", "key")
-      // stored n_members: see minhashBandIndex
-      .agg(collect_list(struct(col("doc_base"), col("sh_base"))).as("ds"),
-        count("*").cast("int").as("n_members"))
-      .filter(col("n_members") <= maxBucket)
+    cappedBandGroups(simhashKernel(base, bits = 60, portable = true)
+        .select(col("doc_id"), col("simhash"),
+          posexplode(simhashBandCols(col("simhash"))))
+        .toDF("doc_base", "sh_base", "band", "key"),
+      Seq("band", "key"), struct(col("doc_base"), col("sh_base")), "ds",
+      maxBucket)
 
   /** Probe (doc_batch, sh_batch, band, key) rows against a
     * [[simhashBandIndex]] with the exact-Hamming verify; multi-band
@@ -1151,14 +1148,26 @@ object Dedup {
     * rebuilds it per ingest. */
   def minhashBandIndex(base: DataFrame, n: Int = 3, numHashes: Int = 64,
       bands: Int = 16, maxBucket: Int = 10000): DataFrame =
-    bandBuckets(minhashSignatures(shingleSets(base, n), numHashes),
-        numHashes, bands)
-      .groupBy("band", "bucket")
-      // n_members rides as a stored column so a stored index's
-      // cap/occupancy reads prune the heavy member-list column at the
-      // parquet scan (the segment probes' totals leg); Catalyst drops
-      // it everywhere it goes unused
-      .agg(collect_list("doc_id").as("base_ds"),
+    cappedBandGroups(bandBuckets(minhashSignatures(shingleSets(base, n),
+        numHashes), numHashes, bands),
+      Seq("band", "bucket"), col("doc_id"), "base_ds", maxBucket)
+
+  /** The member regroup of every banded index, written once: group
+    * `rows` by the band `keys`, collect `member` into `membersCol`,
+    * count the members into `n_members`, and keep the groups at or
+    * under `maxBucket`. The builds ([[minhashBandIndex]],
+    * [[simhashBandIndex]], [[embeddingBandIndex]]) and the segment
+    * compactions of [[graft.sources.DedupIndexStore]] all regroup
+    * through here, which is what makes a compaction equal a rebuild.
+    * `n_members` rides as a stored column so a stored index's
+    * cap/occupancy reads prune the heavy member-list column at the
+    * parquet scan (the segment probes' totals leg); Catalyst drops it
+    * everywhere it goes unused. */
+  private[graft] def cappedBandGroups(rows: DataFrame, keys: Seq[String],
+      member: org.apache.spark.sql.Column, membersCol: String,
+      maxBucket: Int): DataFrame =
+    rows.groupBy(keys.head, keys.tail: _*)
+      .agg(collect_list(member).as(membersCol),
         count("*").cast("int").as("n_members"))
       .filter(col("n_members") <= maxBucket)
 
@@ -1239,14 +1248,11 @@ object Dedup {
     * set at build and probe — persist it with the index). */
   def embeddingBandIndex(base: DataFrame, tables: Seq[Seq[Seq[Double]]],
       maxBucket: Int = 10000): DataFrame =
-    embeddingVecs(base)
-      .select(col("vec_id"),
-        posexplode(Vectors.srpBucketsAll(col("v"), tables)))
-      .toDF("vec_id", "t", "bucket")
-      // stored n_members: see minhashBandIndex
-      .groupBy("t", "bucket").agg(collect_list("vec_id").as("base_ds"),
-        count("*").cast("int").as("n_members"))
-      .filter(col("n_members") <= maxBucket)
+    cappedBandGroups(embeddingVecs(base)
+        .select(col("vec_id"),
+          posexplode(Vectors.srpBucketsAll(col("v"), tables)))
+        .toDF("vec_id", "t", "bucket"),
+      Seq("t", "bucket"), col("vec_id"), "base_ds", maxBucket)
 
   /** Probe half of [[incrementalEmbeddingNearDup]] — the base's
     * relations passed in, fresh or read from bucketed parquet.

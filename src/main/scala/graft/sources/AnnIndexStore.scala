@@ -35,8 +35,38 @@ object AnnIndexStore {
   private def vectors(embs: DataFrame): DataFrame =
     embs.select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
 
+  private def centroidText(centroids: Array[Array[Double]]): String =
+    centroids.map(_.mkString(",")).mkString(";")
+
+  private def codebookText(codebooks: Array[Array[Array[Double]]]): String =
+    codebooks.map(_.map(_.mkString(",")).mkString("|")).mkString(";")
+
   private def centroidDigest(centroids: Array[Array[Double]]): String =
-    DedupIndexStore.md5(centroids.map(_.mkString(",")).mkString(";"))
+    DedupIndexStore.md5(centroidText(centroids))
+
+  /** Registry parameters of the raw-vector rerank tables. */
+  private val vecsParams = s"vecs|${DedupIndexStore.IndexBuckets}"
+
+  /** The probe's query rows (query_id, qv) and ONE scan per segment of
+    * `paths`, each carrying the probed cells as a literal partition
+    * filter, unioned. The cell ids are collected up front (bounded:
+    * ≤ |queries| x nProbe ints — queries are broadcast-small by
+    * contract), so every segment's scan reads ONLY those cells' files
+    * (spec-pinned). One scan per segment for the reason Lucene probes
+    * per segment: a single multi-root read would need the segments to
+    * share a discovery base path, which independent append-only
+    * directories deliberately do not. */
+  private def probedCells(spark: SparkSession, paths: Seq[String],
+      centroids: Array[Array[Double]], queries: DataFrame,
+      nProbe: Int): (DataFrame, DataFrame) = {
+    val qs = queries.select(col("vec_id").as("query_id"),
+      Vectors.toDoubleVec(col("embedding")).as("qv"))
+    val cells = Similarity.ivfProbes(qs, centroids, nProbe)
+      .select("cell").distinct().collect().map(_.getInt(0)).sorted
+    (qs, paths.map(p => spark.read.parquet(p)
+        .filter(col("cell").isin(cells.map(Int.box): _*)))
+      .reduce(_ unionByName _))
+  }
 
   /** Persist the corpus's IVF cell assignment
     * ([[Similarity.ivfAssign]]) partitioned by cell. */
@@ -82,16 +112,14 @@ object AnnIndexStore {
 
   private def ivfPqDigest(centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]]): String =
-    DedupIndexStore.md5(centroids.map(_.mkString(",")).mkString(";") +
-      "#" + codebooks.map(_.map(_.mkString(",")).mkString("|"))
-        .mkString(";"))
+    DedupIndexStore.md5(centroidText(centroids) + "#" +
+      codebookText(codebooks))
 
   /** Persist the corpus's IVF-PQ index: residual-encoded code segments
     * partitioned by cell + the raw vectors bucketed by vec_id. */
   def writeIvfPqIndex(embs: DataFrame,
       centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      buckets: Int = 8): IvfPqIndex = {
+      codebooks: Array[Array[Array[Double]]]): IvfPqIndex = {
     val e = vectors(embs)
     val key = DedupIndexStore.identityKey(embs)
     IvfPqIndex(
@@ -101,8 +129,8 @@ object AnnIndexStore {
       // the raw vectors are MODEL-INDEPENDENT, so the digest stays
       // out of this key: retraining centroids/codebooks over the same
       // corpus reuses the (largest) rerank relation as-is
-      Seq(DedupIndexStore.table("ivfpq_vecs", key, s"vecs|$buckets",
-        Seq("vec_id"), buckets)(e)),
+      Seq(DedupIndexStore.table("ivfpq_vecs", key, vecsParams,
+        Seq("vec_id"))(e)),
       centroids, codebooks)
   }
 
@@ -114,7 +142,7 @@ object AnnIndexStore {
     * batch. O(batch) per ingest; nothing existing is read or
     * rewritten. */
   def refreshIvfPqIndex(spark: SparkSession, idx: IvfPqIndex,
-      accepted: DataFrame, buckets: Int = 8): IvfPqIndex = {
+      accepted: DataFrame): IvfPqIndex = {
     val e = vectors(accepted)
     val key = DedupIndexStore.identityKey(accepted)
     IvfPqIndex(
@@ -124,7 +152,7 @@ object AnnIndexStore {
         Similarity.ivfPqIndexRows(e, idx.centroids, idx.codebooks)),
       idx.vecsTables :+ DedupIndexStore.table("ivfpq_vecs_r",
         key.map(k => s"refresh|${idx.vecsTables.mkString(",")}|$k"),
-        s"vecs|$buckets", Seq("vec_id"), buckets)(e),
+        vecsParams, Seq("vec_id"))(e),
       idx.centroids, idx.codebooks)
   }
 
@@ -168,13 +196,13 @@ object AnnIndexStore {
     * Union of the co-bucketed vecs tables claims their bucketing, the
     * writer's same-key repartition is elided against that claim, and
     * each bucket comes out as one file per input table. */
-  def compactIvfPqIndex(spark: SparkSession, idx: IvfPqIndex,
-      buckets: Int = 8): IvfPqIndex =
+  def compactIvfPqIndex(spark: SparkSession,
+      idx: IvfPqIndex): IvfPqIndex =
     IvfPqIndex(compactSegments(spark, idx.paths, "ivfpq"),
       if (idx.vecsTables.size == 1) idx.vecsTables
       else Seq(DedupIndexStore.table("ivfpq_vecs_c",
         Some(s"compact|${idx.vecsTables.mkString(",")}"),
-        s"vecs|$buckets", Seq("vec_id"), buckets)(
+        vecsParams, Seq("vec_id"))(
         DedupIndexStore.segmentScan(spark, idx.vecsTables))),
       idx.centroids, idx.codebooks)
 
@@ -188,10 +216,8 @@ object AnnIndexStore {
       queries: DataFrame, k: Int, nProbe: Int,
       refine: Int): DataFrame = {
     DedupIndexStore.enableBucketedSortOrder(spark)
-    val qs = queries.select(col("vec_id").as("query_id"),
-      Vectors.toDoubleVec(col("embedding")).as("qv"))
-    val cells = Similarity.ivfProbes(qs, idx.centroids, nProbe)
-      .select("cell").distinct().collect().map(_.getInt(0)).sorted
+    val (qs, codes) =
+      probedCells(spark, idx.paths, idx.centroids, queries, nProbe)
     // multi-segment vecs union is safe WITHOUT a repartition fence
     // here: ivfPqProbeFrom broadcasts the bounded candidate side of
     // the rerank join, and a broadcast join never consults the
@@ -200,10 +226,7 @@ object AnnIndexStore {
     // shuffle join or aggregation). Shuffling the whole raw-vector
     // relation per probe to restore the claim would cost exactly
     // what storage exists to avoid.
-    Similarity.ivfPqProbeFrom(
-      idx.paths.map(p => spark.read.parquet(p)
-          .filter(col("cell").isin(cells.map(Int.box): _*)))
-        .reduce(_ unionByName _),
+    Similarity.ivfPqProbeFrom(codes,
       idx.vecsTables.map(spark.table).reduce(_ unionByName _),
       qs, idx.centroids, idx.codebooks, k, nProbe, refine)
   }
@@ -219,18 +242,15 @@ object AnnIndexStore {
   /** Persist the corpus's PQ code relation ([[Similarity.pqEncode]]
     * under the given trained codebooks) plus the raw vectors. */
   def writePqIndex(embs: DataFrame,
-      codebooks: Array[Array[Array[Double]]],
-      buckets: Int = 8): PqIndex = {
+      codebooks: Array[Array[Array[Double]]]): PqIndex = {
     val e = vectors(embs)
     val key = DedupIndexStore.identityKey(embs)
-    val params = s"pq|$buckets|cb:" +
-      DedupIndexStore.md5(codebooks.map(_.map(_.mkString(",")).mkString("|"))
-        .mkString(";"))
+    val params = s"pq|${DedupIndexStore.IndexBuckets}|cb:" +
+      DedupIndexStore.md5(codebookText(codebooks))
     PqIndex(
-      DedupIndexStore.table("pq_codes", key, params, Seq("vec_id"),
-        buckets)(Similarity.pqEncode(e, codebooks)),
-      DedupIndexStore.table("pq_vecs", key, params, Seq("vec_id"),
-        buckets)(e),
+      DedupIndexStore.table("pq_codes", key, params, Seq("vec_id"))(
+        Similarity.pqEncode(e, codebooks)),
+      DedupIndexStore.table("pq_vecs", key, params, Seq("vec_id"))(e),
       codebooks)
   }
 
@@ -251,25 +271,12 @@ object AnnIndexStore {
 
   /** Probe a stored IVF index — output identical to
     * [[Similarity.ivfTopK]] with the same injected centroids.
-    * `queries` are raw embedding rows (vec_id, embedding, ...). The
-    * probed cell ids are collected up front (bounded: ≤ |queries| x
-    * nProbe ints — queries are broadcast-small by contract) so the
-    * index scan carries them as a literal partition filter and reads
-    * ONLY those cells' files (spec-pinned). */
+    * `queries` are raw embedding rows (vec_id, embedding, ...); the
+    * index is read through [[probedCells]]. */
   def probeIvf(spark: SparkSession, idx: IvfIndex, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
-    val qs = queries.select(col("vec_id").as("query_id"),
-      Vectors.toDoubleVec(col("embedding")).as("qv"))
-    val cells = Similarity.ivfProbes(qs, idx.centroids, nProbe)
-      .select("cell").distinct().collect().map(_.getInt(0)).sorted
-    // one pruned scan PER SEGMENT, unioned (Lucene probes per segment
-    // for the same reason); a single multi-root read would need the
-    // segments to share a discovery base path, which independent
-    // append-only directories deliberately do not
-    Similarity.ivfProbeFrom(
-      idx.paths.map(p => spark.read.parquet(p)
-          .filter(col("cell").isin(cells.map(Int.box): _*)))
-        .reduce(_ unionByName _),
-      idx.centroids, qs, k, nProbe)
+    val (qs, cells) =
+      probedCells(spark, idx.paths, idx.centroids, queries, nProbe)
+    Similarity.ivfProbeFrom(cells, idx.centroids, qs, k, nProbe)
   }
 }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * at ~26 GB for 5M docs — PERF.md §1000x) and every subsequent ingest
   * READS it. This object is that contract made literal: each `write*`
   * persists the index relations as parquet tables bucketed by their
-  * probe key via [[Bucketing]], and each `probe*` re-derives the exact
+  * probe key via [[Bucketing]] (every store table has the same
+  * [[IndexBuckets]] buckets), and each `probe*` re-derives the exact
   * incremental-operator output from `spark.table(...)` scans — same
   * answer (the oracle doesn't move), different lineage (storage, not
   * recomputation).
@@ -63,8 +64,9 @@ object DedupIndexStore {
     * LogicalRDD anywhere in it (e.g. a spec fixture unioned onto a
     * parquet table) carries data the canonical plan does not print,
     * so two same-shape plans over different in-memory rows would
-    * collide (the replay-cache lesson). Those build uncached. */
-  private[sources] def identityKey(df: DataFrame): Option[String] = {
+    * collide (the replay-cache lesson). Those build uncached. The
+    * drains' replay cache keys by it too. */
+  private[graft] def identityKey(df: DataFrame): Option[String] = {
     val plan = df.queryExecution.analyzed
     val inMemory = plan.exists {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
@@ -127,10 +129,9 @@ object DedupIndexStore {
     * tables through here too). `build` is by-name: a registry hit
     * never constructs the relation at all. Returns the table name. */
   private[sources] def table(family: String, key: Option[String],
-      params: String,
-      keys: Seq[String], buckets: Int)(build: => DataFrame): String =
+      params: String, keys: Seq[String])(build: => DataFrame): String =
     registered(family, key, params) { (name, dir) =>
-      Bucketing.writeBucketed(build, name, dir, keys, buckets)
+      Bucketing.writeBucketed(build, name, dir, keys, IndexBuckets)
       name
     }
 
@@ -148,11 +149,9 @@ object DedupIndexStore {
   /** Persist the base corpus's distinct-fingerprint index
     * ([[Dedup.exactFpIndex]]) bucketed by fp_md5 — exact dedup's
     * probe key. */
-  def writeExactIndex(base: DataFrame, buckets: Int = 8): ExactIndex = {
-    val key = identityKey(base)
-    ExactIndex(table("fp_idx", key, s"ex|$buckets", Seq("fp_md5"),
-      buckets)(Dedup.exactFpIndex(base)))
-  }
+  def writeExactIndex(base: DataFrame): ExactIndex =
+    ExactIndex(table("fp_idx", identityKey(base), s"ex|$IndexBuckets",
+      Seq("fp_md5"))(Dedup.exactFpIndex(base)))
 
   /** Probe a stored fingerprint index — output identical to
     * [[Dedup.incrementalExact]] over the same base. The anti-join's
@@ -169,14 +168,13 @@ object DedupIndexStore {
     * key) plus its shingle sets (bucketed by doc_id — the exact-verify
     * side). */
   def writeMinhashIndex(base: DataFrame, n: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, maxBucket: Int = 10000,
-      buckets: Int = 8): MinhashIndex = {
+      bands: Int = 16, maxBucket: Int = 10000): MinhashIndex = {
     val key = identityKey(base)
-    val params = s"mh|$n|$numHashes|$bands|$maxBucket|$buckets"
+    val params = s"mh|$n|$numHashes|$bands|$maxBucket|$IndexBuckets"
     MinhashIndex(
-      table("mh_buckets", key, params, Seq("band", "bucket"), buckets)(
+      table("mh_buckets", key, params, Seq("band", "bucket"))(
         Dedup.minhashBandIndex(base, n, numHashes, bands, maxBucket)),
-      table("mh_sets", key, params, Seq("doc_id"), buckets)(
+      table("mh_sets", key, params, Seq("doc_id"))(
         Dedup.shingleSets(base, n)),
       n, numHashes, bands)
   }
@@ -199,14 +197,11 @@ object DedupIndexStore {
     * ([[Dedup.simhashBandIndex]]) bucketed by its (band, key) probe
     * key; the 60-bit fingerprints ride inside the member structs, so
     * the Hamming verify needs no second table. */
-  def writeSimhashIndex(base: DataFrame, maxBucket: Int = 65535,
-      buckets: Int = 8): SimhashIndex = {
-    val key = identityKey(base)
-    val params = s"sh|$maxBucket|$buckets"
-    SimhashIndex(
-      table("sh_idx", key, params, Seq("band", "key"), buckets)(
-        Dedup.simhashBandIndex(base, maxBucket)))
-  }
+  def writeSimhashIndex(base: DataFrame,
+      maxBucket: Int = 65535): SimhashIndex =
+    SimhashIndex(table("sh_idx", identityKey(base),
+      s"sh|$maxBucket|$IndexBuckets", Seq("band", "key"))(
+      Dedup.simhashBandIndex(base, maxBucket)))
 
   /** Probe a stored simhash index — output identical to
     * [[Dedup.incrementalSimhashPairs]] over the same base. */
@@ -226,14 +221,15 @@ object DedupIndexStore {
     * [[probeEmbedding]] (a deployment persists them with the index;
     * the plane digest is part of the registry key). */
   def writeEmbeddingIndex(base: DataFrame,
-      tables: Seq[Seq[Seq[Double]]], maxBucket: Int = 10000,
-      buckets: Int = 8): EmbeddingIndex = {
+      tables: Seq[Seq[Seq[Double]]],
+      maxBucket: Int = 10000): EmbeddingIndex = {
     val key = identityKey(base)
-    val params = s"emb|$maxBucket|$buckets|planes:${md5(tables.toString)}"
+    val params =
+      s"emb|$maxBucket|$IndexBuckets|planes:${md5(tables.toString)}"
     EmbeddingIndex(
-      table("emb_buckets", key, params, Seq("t", "bucket"), buckets)(
+      table("emb_buckets", key, params, Seq("t", "bucket"))(
         Dedup.embeddingBandIndex(base, tables, maxBucket)),
-      table("emb_vecs", key, params, Seq("vec_id"), buckets)(
+      table("emb_vecs", key, params, Seq("vec_id"))(
         Dedup.embeddingVecs(base)))
   }
 
@@ -251,16 +247,15 @@ object DedupIndexStore {
   final case class SegmentedExact(segments: Seq[ExactIndex])
 
   /** The base build: one segment from the initial corpus. */
-  def writeExactSegmented(base: DataFrame,
-      buckets: Int = 8): SegmentedExact =
-    SegmentedExact(Seq(writeExactIndex(base, buckets)))
+  def writeExactSegmented(base: DataFrame): SegmentedExact =
+    SegmentedExact(Seq(writeExactIndex(base)))
 
   /** O(batch) maintenance: hash ONLY the accepted batch into a new
     * segment (same registry independence as
     * [[graft.sources.PostingsStore.appendSegment]]). */
-  def appendExactSegment(idx: SegmentedExact, accepted: DataFrame,
-      buckets: Int = 8): SegmentedExact =
-    SegmentedExact(idx.segments :+ writeExactIndex(accepted, buckets))
+  def appendExactSegment(idx: SegmentedExact,
+      accepted: DataFrame): SegmentedExact =
+    SegmentedExact(idx.segments :+ writeExactIndex(accepted))
 
   /** Probe a segment list — output identical to [[probeExact]] against
     * the equivalent merged index (anti-join ignores cross-segment
@@ -298,6 +293,14 @@ object DedupIndexStore {
     * ([[AnnIndexStore.DefaultMaxSegments]]). */
   val DefaultMaxSegments = 4
 
+  /** Bucket count of every stored index table: each dedup family's
+    * tables and compactions, and [[PostingsStore]]'s and
+    * [[AnnIndexStore]]'s bucketed tables, each bucket one sorted file
+    * ([[Bucketing.writeBucketed]]). The count is part of every
+    * registry `params` string (`ex|8`, `pt|8`, ...), so it names the
+    * tables too. */
+  val IndexBuckets = 8
+
   /** The LSM count trigger — WHEN to run the third verb, for any
     * family's segment list: `compact(idx)` once the list's
     * `segments` exceed `maxSegments`, otherwise `idx` itself (no new
@@ -315,12 +318,12 @@ object DedupIndexStore {
     * real — a Union here could claim the segments' common bucketing
     * and leave per-segment groups, i.e. duplicate fingerprints in the
     * compacted table. */
-  def compactExactSegments(spark: SparkSession, idx: SegmentedExact,
-      buckets: Int = 8): ExactIndex = {
+  def compactExactSegments(spark: SparkSession,
+      idx: SegmentedExact): ExactIndex = {
     if (idx.segments.size == 1) return idx.segments.head
     val key = Some(s"compact|${idx.segments.map(_.table).mkString(",")}")
-    ExactIndex(table("fp_idx_c", key, s"ex|$buckets", Seq("fp_md5"),
-      buckets)(
+    ExactIndex(table("fp_idx_c", key, s"ex|$IndexBuckets",
+      Seq("fp_md5"))(
       segmentScan(spark, idx.segments.map(_.table)).distinct()))
   }
 
@@ -383,23 +386,36 @@ object DedupIndexStore {
   def segProbeMetricSurvName(family: String): String =
     s"graft_seg_probe_${family}_surv"
 
-  private def segProbeTelemetry(totalsLeg: DataFrame, family: String,
-      nSegments: Int): DataFrame =
-    totalsLeg.observe(segProbeMetricName(family),
-      max(lit(nSegments)).as("segments_scanned"),
-      count(lit(1)).as("bucket_rows_pre"),
-      sum(col("n_members")).as("members_pre"))
-
-  private def segProbeTelemetrySurv(surviving: DataFrame,
-      family: String): DataFrame =
-    surviving.observe(segProbeMetricSurvName(family),
-      count(lit(1)).as("bucket_groups"))
-
-  private def segProbeTelemetryPost(candidates: DataFrame,
-      family: String): DataFrame =
-    candidates.observe(segProbeMetricPostName(family),
-      count(lit(1)).as("bucket_rows_post"),
-      sum(col("n_members")).as("members_post"))
+  /** The probe-time GLOBAL cap of a banded segment list, with its
+    * telemetry: the bucket rows of the segment `tables` (read through
+    * [[segmentScan]]) whose band `keys` total at most `maxBucket`
+    * members across ALL segments — exactly the buckets a single
+    * capped build over the union of the batches keeps, whether or not
+    * the cap binds. The totals leg reads the STORED `n_members` column
+    * only, so parquet prunes the heavy member-list column from that
+    * scan. The three observe nodes ride along: `<family>` on the
+    * totals leg, `<family>_surv` on the surviving keys and
+    * `<family>_post` on the returned rows (see
+    * [[segProbeMetricName]]). */
+  private def cappedSegmentBuckets(spark: SparkSession,
+      tables: Seq[String], family: String, keys: Seq[String],
+      maxBucket: Int): DataFrame = {
+    val uni = segmentScan(spark, tables)
+    val surviving = uni.select((keys :+ "n_members").map(col): _*)
+      .observe(segProbeMetricName(family),
+        max(lit(tables.size)).as("segments_scanned"),
+        count(lit(1)).as("bucket_rows_pre"),
+        sum(col("n_members")).as("members_pre"))
+      .groupBy(keys.head, keys.tail: _*).agg(sum("n_members").as("n"))
+      .filter(col("n") <= maxBucket)
+      .select(keys.map(col): _*)
+      .observe(segProbeMetricSurvName(family),
+        count(lit(1)).as("bucket_groups"))
+    uni.join(surviving, keys)
+      .observe(segProbeMetricPostName(family),
+        count(lit(1)).as("bucket_rows_post"),
+        sum(col("n_members")).as("members_post"))
+  }
 
   /** The last EXECUTED segment probe's read amplification, in basis
     * points (integer; 10000 = a compacted index's floor of one stored
@@ -466,22 +482,19 @@ object DedupIndexStore {
   /** The base build: one UNCAPPED segment (see the cap-at-probe note
     * above). */
   def writeEmbeddingSegmented(base: DataFrame,
-      tables: Seq[Seq[Seq[Double]]],
-      buckets: Int = 8): SegmentedEmbedding =
+      tables: Seq[Seq[Seq[Double]]]): SegmentedEmbedding =
     SegmentedEmbedding(Seq(writeEmbeddingIndex(base, tables,
-      maxBucket = Int.MaxValue, buckets = buckets)),
-      md5(tables.toString))
+      maxBucket = Int.MaxValue)), md5(tables.toString))
 
   /** O(batch) maintenance: bucket ONLY the accepted batch into a new
     * uncapped segment — base tables never read or rewritten. The
     * planes must match the list's digest (see [[SegmentedEmbedding]]). */
   def appendEmbeddingSegment(idx: SegmentedEmbedding,
-      accepted: DataFrame, tables: Seq[Seq[Seq[Double]]],
-      buckets: Int = 8): SegmentedEmbedding = {
+      accepted: DataFrame,
+      tables: Seq[Seq[Seq[Double]]]): SegmentedEmbedding = {
     requirePlanes(idx, tables, "appendEmbeddingSegment")
     SegmentedEmbedding(idx.segments :+ writeEmbeddingIndex(accepted,
-      tables, maxBucket = Int.MaxValue, buckets = buckets),
-      idx.planesDigest)
+      tables, maxBucket = Int.MaxValue), idx.planesDigest)
   }
 
   /** Probe a segment list — output identical to [[probeEmbedding]]
@@ -499,22 +512,9 @@ object DedupIndexStore {
       maxBucket: Int = 10000): DataFrame = {
     requirePlanes(idx, tables, "probeEmbeddingSeg")
     enableBucketedSortOrder(spark)
-    val uni = segmentScan(spark, idx.segments.map(_.bucketsTable))
-    // the GLOBAL cap decision, recovered over the union: total
-    // members per (t, bucket) across all segments — only buckets at
-    // or under the cap survive into candidate generation
-    // totals leg reads the STORED n_members column only — parquet
-    // prunes the heavy member-list column from this scan
-    val surviving = segProbeTelemetrySurv(
-      segProbeTelemetry(uni
-          .select(col("t"), col("bucket"), col("n_members")),
-          "embedding", idx.segments.size)
-        .groupBy("t", "bucket").agg(sum("n_members").as("n"))
-        .filter(col("n") <= maxBucket)
-        .select(col("t"), col("bucket")), "embedding")
     Dedup.embeddingProbe(
-      segProbeTelemetryPost(uni.join(surviving, Seq("t", "bucket")),
-        "embedding"),
+      cappedSegmentBuckets(spark, idx.segments.map(_.bucketsTable),
+        "embedding", Seq("t", "bucket"), maxBucket),
       segmentScan(spark, idx.segments.map(_.vecsTable)),
       batch, threshold, tables)
   }
@@ -525,20 +525,18 @@ object DedupIndexStore {
 
   /** The base build: one UNCAPPED segment. */
   def writeMinhashSegmented(base: DataFrame, n: Int = 3,
-      numHashes: Int = 64, bands: Int = 16,
-      buckets: Int = 8): SegmentedMinhash =
+      numHashes: Int = 64, bands: Int = 16): SegmentedMinhash =
     SegmentedMinhash(Seq(writeMinhashIndex(base, n, numHashes, bands,
-      maxBucket = Int.MaxValue, buckets = buckets)))
+      maxBucket = Int.MaxValue)))
 
   /** O(batch) maintenance: shingle + sign ONLY the accepted batch
     * into a new uncapped segment pair (bucket index + shingle sets —
     * base tables never read or rewritten). */
-  def appendMinhashSegment(idx: SegmentedMinhash, accepted: DataFrame,
-      buckets: Int = 8): SegmentedMinhash = {
+  def appendMinhashSegment(idx: SegmentedMinhash,
+      accepted: DataFrame): SegmentedMinhash = {
     val h = idx.segments.head
     SegmentedMinhash(idx.segments :+ writeMinhashIndex(accepted, h.n,
-      h.numHashes, h.bands, maxBucket = Int.MaxValue,
-      buckets = buckets))
+      h.numHashes, h.bands, maxBucket = Int.MaxValue))
   }
 
   /** Probe a minhash segment list — output identical to
@@ -553,19 +551,9 @@ object DedupIndexStore {
       maxBucket: Int = 10000): DataFrame = {
     enableBucketedSortOrder(spark)
     val h = idx.segments.head
-    val uni = segmentScan(spark, idx.segments.map(_.bucketsTable))
-    // totals leg reads the STORED n_members column only (see
-    // probeEmbeddingSeg)
-    val surviving = segProbeTelemetrySurv(
-      segProbeTelemetry(uni
-          .select(col("band"), col("bucket"), col("n_members")),
-          "minhash", idx.segments.size)
-        .groupBy("band", "bucket").agg(sum("n_members").as("n"))
-        .filter(col("n") <= maxBucket)
-        .select(col("band"), col("bucket")), "minhash")
     Dedup.minhashProbe(
-      segProbeTelemetryPost(uni.join(surviving, Seq("band", "bucket")),
-        "minhash"),
+      cappedSegmentBuckets(spark, idx.segments.map(_.bucketsTable),
+        "minhash", Seq("band", "bucket"), maxBucket),
       segmentScan(spark, idx.segments.map(_.setsTable)),
       batch, h.n, threshold, h.numHashes, h.bands)
   }
@@ -574,17 +562,16 @@ object DedupIndexStore {
   final case class SegmentedSimhash(segments: Seq[SimhashIndex])
 
   /** The base build: one UNCAPPED segment. */
-  def writeSimhashSegmented(base: DataFrame,
-      buckets: Int = 8): SegmentedSimhash =
+  def writeSimhashSegmented(base: DataFrame): SegmentedSimhash =
     SegmentedSimhash(Seq(writeSimhashIndex(base,
-      maxBucket = Int.MaxValue, buckets = buckets)))
+      maxBucket = Int.MaxValue)))
 
   /** O(batch) maintenance: fingerprint ONLY the accepted batch (the
     * SimhashBits kernel pass) into a new uncapped segment. */
-  def appendSimhashSegment(idx: SegmentedSimhash, accepted: DataFrame,
-      buckets: Int = 8): SegmentedSimhash =
+  def appendSimhashSegment(idx: SegmentedSimhash,
+      accepted: DataFrame): SegmentedSimhash =
     SegmentedSimhash(idx.segments :+ writeSimhashIndex(accepted,
-      maxBucket = Int.MaxValue, buckets = buckets))
+      maxBucket = Int.MaxValue))
 
   /** Probe a simhash segment list — output identical to
     * [[probeSimhash]] against the single CAPPED index over the union
@@ -594,19 +581,9 @@ object DedupIndexStore {
       batch: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 65535): DataFrame = {
     enableBucketedSortOrder(spark)
-    val uni = segmentScan(spark, idx.segments.map(_.table))
-    // totals leg reads the STORED n_members column only (see
-    // probeEmbeddingSeg)
-    val surviving = segProbeTelemetrySurv(
-      segProbeTelemetry(uni
-          .select(col("band"), col("key"), col("n_members")),
-          "simhash", idx.segments.size)
-        .groupBy("band", "key").agg(sum("n_members").as("n"))
-        .filter(col("n") <= maxBucket)
-        .select(col("band"), col("key")), "simhash")
     Dedup.simhashProbe(Dedup.simhashBatchBanded(batch),
-        segProbeTelemetryPost(uni.join(surviving, Seq("band", "key")),
-          "simhash"), maxHamming)
+        cappedSegmentBuckets(spark, idx.segments.map(_.table), "simhash",
+          Seq("band", "key"), maxBucket), maxHamming)
       .distinct()
       .orderBy("doc_batch", "doc_base")
   }
@@ -619,24 +596,22 @@ object DedupIndexStore {
     * union of the batches EXACTLY, whether or not the cap binds.
     * O(index); the corpus is never re-read or re-shingled. */
   def compactMinhashSegments(spark: SparkSession, idx: SegmentedMinhash,
-      maxBucket: Int = 10000, buckets: Int = 8): MinhashIndex = {
+      maxBucket: Int = 10000): MinhashIndex = {
     val h = idx.segments.head
-    val params = s"mh|${h.n}|${h.numHashes}|${h.bands}|$maxBucket|$buckets"
+    val params =
+      s"mh|${h.n}|${h.numHashes}|${h.bands}|$maxBucket|$IndexBuckets"
     val key = Some(
       s"compact|${idx.segments.map(_.bucketsTable).mkString(",")}")
     val sKey = Some(
       s"compact|${idx.segments.map(_.setsTable).mkString(",")}")
     MinhashIndex(
-      table("mh_buckets_sc", key, params, Seq("band", "bucket"),
-        buckets)(
-        segmentScan(spark, idx.segments.map(_.bucketsTable))
-          .select(col("band"), col("bucket"),
-            explode(col("base_ds")).as("doc_id"))
-          .groupBy("band", "bucket")
-          .agg(collect_list("doc_id").as("base_ds"),
-            count("*").cast("int").as("n_members"))
-          .filter(col("n_members") <= maxBucket)),
-      table("mh_sets_sc", sKey, params, Seq("doc_id"), buckets)(
+      table("mh_buckets_sc", key, params, Seq("band", "bucket"))(
+        Dedup.cappedBandGroups(
+          segmentScan(spark, idx.segments.map(_.bucketsTable))
+            .select(col("band"), col("bucket"),
+              explode(col("base_ds")).as("doc_id")),
+          Seq("band", "bucket"), col("doc_id"), "base_ds", maxBucket)),
+      table("mh_sets_sc", sKey, params, Seq("doc_id"))(
         segmentScan(spark, idx.segments.map(_.setsTable))),
       h.n, h.numHashes, h.bands)
   }
@@ -644,42 +619,37 @@ object DedupIndexStore {
   /** [[compactMinhashSegments]] for the simhash list (member structs
     * carry the fingerprints, so the merge is pure regroup). */
   def compactSimhashSegments(spark: SparkSession, idx: SegmentedSimhash,
-      maxBucket: Int = 65535, buckets: Int = 8): SimhashIndex = {
+      maxBucket: Int = 65535): SimhashIndex = {
     val key = Some(
       s"compact|${idx.segments.map(_.table).mkString(",")}")
     SimhashIndex(
-      table("sh_idx_sc", key, s"sh|$maxBucket|$buckets",
-        Seq("band", "key"), buckets)(
-        segmentScan(spark, idx.segments.map(_.table))
-          .select(col("band"), col("key"), explode(col("ds")).as("e"))
-          .select(col("e.doc_base").as("doc_base"),
-            col("e.sh_base").as("sh_base"), col("band"), col("key"))
-          .groupBy("band", "key")
-          .agg(collect_list(struct(col("doc_base"), col("sh_base")))
-            .as("ds"),
-            count("*").cast("int").as("n_members"))
-          .filter(col("n_members") <= maxBucket)))
+      table("sh_idx_sc", key, s"sh|$maxBucket|$IndexBuckets",
+        Seq("band", "key"))(
+        Dedup.cappedBandGroups(
+          segmentScan(spark, idx.segments.map(_.table))
+            .select(col("band"), col("key"), explode(col("ds")).as("e"))
+            .select(col("e.doc_base").as("doc_base"),
+              col("e.sh_base").as("sh_base"), col("band"), col("key")),
+          Seq("band", "key"), struct(col("doc_base"), col("sh_base")),
+          "ds", maxBucket)))
   }
 
   /** [[compactMinhashSegments]] for the embedding list. */
   def compactEmbeddingSegments(spark: SparkSession,
-      idx: SegmentedEmbedding, maxBucket: Int = 10000,
-      buckets: Int = 8): EmbeddingIndex = {
+      idx: SegmentedEmbedding, maxBucket: Int = 10000): EmbeddingIndex = {
     val key = Some(
       s"compact|${idx.segments.map(_.bucketsTable).mkString(",")}")
     val vKey = Some(
       s"compact|${idx.segments.map(_.vecsTable).mkString(",")}")
-    val params = s"emb|$maxBucket|$buckets|compacted"
+    val params = s"emb|$maxBucket|$IndexBuckets|compacted"
     EmbeddingIndex(
-      table("emb_buckets_sc", key, params, Seq("t", "bucket"), buckets)(
-        segmentScan(spark, idx.segments.map(_.bucketsTable))
-          .select(col("t"), col("bucket"),
-            explode(col("base_ds")).as("vec_id"))
-          .groupBy("t", "bucket")
-          .agg(collect_list("vec_id").as("base_ds"),
-            count("*").cast("int").as("n_members"))
-          .filter(col("n_members") <= maxBucket)),
-      table("emb_vecs_sc", vKey, params, Seq("vec_id"), buckets)(
+      table("emb_buckets_sc", key, params, Seq("t", "bucket"))(
+        Dedup.cappedBandGroups(
+          segmentScan(spark, idx.segments.map(_.bucketsTable))
+            .select(col("t"), col("bucket"),
+              explode(col("base_ds")).as("vec_id")),
+          Seq("t", "bucket"), col("vec_id"), "base_ds", maxBucket)),
+      table("emb_vecs_sc", vKey, params, Seq("vec_id"))(
         segmentScan(spark, idx.segments.map(_.vecsTable))))
   }
 

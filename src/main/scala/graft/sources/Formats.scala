@@ -10,8 +10,8 @@ final case class QuarantinedRead(clean: DataFrame, quarantined: DataFrame,
   def release(): Unit = { raw.unpersist(); () }
 }
 
-/** File-format breadth beyond the harness's parquet: CSV, JSON lines,
-  * and plain text, with explicit schemas on read (schema inference
+/** File-format breadth beyond the harness's parquet: CSV, JSON lines
+  * and ORC, with explicit schemas on read (schema inference
   * costs a full extra pass at scale and races on changing data — a
   * 100 TB pipeline always declares its schema).
   *
@@ -62,15 +62,6 @@ object Formats {
 
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
-
-  def readText(s: SparkSession, path: String): DataFrame =
-    s.read.text(path)
-
-  def readParquet(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   def readOrc(s: SparkSession, path: String): DataFrame =
     s.read.orc(path)

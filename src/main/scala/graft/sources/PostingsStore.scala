@@ -33,17 +33,20 @@ object PostingsStore {
 
   final case class PostingsIndex(table: String, doclensTable: String)
 
+  /** Registry parameters of every postings table (base, segment and
+    * compacted alike). */
+  private val params = s"pt|${DedupIndexStore.IndexBuckets}"
+
   /** Persist the corpus's full positional index bucketed by term plus
     * its doclens side table bucketed by doc_id. The one corpus read of
     * the index lifecycle. */
-  def writePostings(docs: DataFrame, buckets: Int = 8): PostingsIndex = {
+  def writePostings(docs: DataFrame): PostingsIndex = {
     val key = DedupIndexStore.identityKey(docs)
-    val params = s"pt|$buckets"
     PostingsIndex(
-      DedupIndexStore.table("postings", key, params, Seq("term"),
-        buckets)(CorpusOps.postingsRows(docs)),
-      DedupIndexStore.table("doclens", key, params, Seq("doc_id"),
-        buckets)(CorpusOps.doclensRows(docs)))
+      DedupIndexStore.table("postings", key, params, Seq("term"))(
+        CorpusOps.postingsRows(docs)),
+      DedupIndexStore.table("doclens", key, params, Seq("doc_id"))(
+        CorpusOps.doclensRows(docs)))
   }
 
   /** Exact consecutive-phrase search served FROM the stored index —
@@ -91,18 +94,17 @@ object PostingsStore {
   final case class SegmentedPostings(segments: Seq[PostingsIndex])
 
   /** The base build: one segment from the initial corpus. */
-  def writeSegmented(docs: DataFrame,
-      buckets: Int = 8): SegmentedPostings =
-    SegmentedPostings(Seq(writePostings(docs, buckets)))
+  def writeSegmented(docs: DataFrame): SegmentedPostings =
+    SegmentedPostings(Seq(writePostings(docs)))
 
   /** O(batch) maintenance: tokenize ONLY the accepted batch and land
     * it as a NEW segment pair. A segment's content depends on its
     * batch alone (not on the base it joins), so the build-once
     * registry key is the batch's own identity — the same batch
     * appended to two different bases reuses one physical segment. */
-  def appendSegment(idx: SegmentedPostings, accepted: DataFrame,
-      buckets: Int = 8): SegmentedPostings =
-    SegmentedPostings(idx.segments :+ writePostings(accepted, buckets))
+  def appendSegment(idx: SegmentedPostings,
+      accepted: DataFrame): SegmentedPostings =
+    SegmentedPostings(idx.segments :+ writePostings(accepted))
 
   /** The segment union in the stored postings shape: (term, doc_id)
     * groups that span segments (a re-ingested doc_id) merge by the
@@ -201,18 +203,17 @@ object PostingsStore {
     * floor by 8 at the 10x decade (PERF.md §"Compaction trigger
     * policy") — hence [[DedupIndexStore.DefaultMaxSegments]] as this
     * family's count trigger. */
-  def compactSegments(spark: SparkSession, idx: SegmentedPostings,
-      buckets: Int = 8): PostingsIndex = {
+  def compactSegments(spark: SparkSession,
+      idx: SegmentedPostings): PostingsIndex = {
     if (idx.segments.size == 1) return idx.segments.head
-    val params = s"pt|$buckets"
     val pKey = Some(
       s"compact|${idx.segments.map(_.table).mkString(",")}")
     val dKey = Some(
       s"compact|${idx.segments.map(_.doclensTable).mkString(",")}")
     PostingsIndex(
-      DedupIndexStore.table("postings_c", pKey, params, Seq("term"),
-        buckets)(postingsView(spark, idx)),
-      DedupIndexStore.table("doclens_c", dKey, params, Seq("doc_id"),
-        buckets)(doclensView(spark, idx)))
+      DedupIndexStore.table("postings_c", pKey, params, Seq("term"))(
+        postingsView(spark, idx)),
+      DedupIndexStore.table("doclens_c", dKey, params, Seq("doc_id"))(
+        doclensView(spark, idx)))
   }
 }

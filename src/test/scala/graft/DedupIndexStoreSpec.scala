@@ -445,27 +445,55 @@ class DedupIndexStoreSpec extends SparkSpec {
   test("segmented probes publish read-amplification telemetry " +
       "(segments scanned, bucket rows pre/post prune)") {
     val docs = corpus
-    val v2 = DedupIndexStore.appendMinhashSegment(
-      DedupIndexStore.writeMinhashSegmented(
-        docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)),
-      docs.filter(pmod(col("doc_id"), lit(8)) === 4))
-    val probe = DedupIndexStore.probeMinhashSeg(spark, v2,
-      docs.filter(pmod(col("doc_id"), lit(8)) === 0))
-    probe.collect()
-    val pre = probe.queryExecution
-      .observedMetrics(DedupIndexStore.segProbeMetricName("minhash"))
-    val post = probe.queryExecution
-      .observedMetrics(DedupIndexStore.segProbeMetricPostName("minhash"))
-    assert(pre.getAs[Int]("segments_scanned") == 2)
-    assert(pre.getAs[Long]("bucket_rows_pre") > 0)
-    assert(pre.getAs[Long]("members_pre") >=
-      pre.getAs[Long]("bucket_rows_pre"))
-    // under the default (non-binding) cap nothing is pruned: the
-    // candidate leg re-reads exactly the pre-prune rows — the 2x
-    // read amplification a compacted single index would reset
-    assert(post.getAs[Long]("bucket_rows_post")
-      <= pre.getAs[Long]("bucket_rows_pre"))
-    assert(post.getAs[Long]("members_post") > 0)
+    val dBase = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
+    val dGen1 = docs.filter(pmod(col("doc_id"), lit(8)) === 4)
+    val dGen2 = docs.filter(pmod(col("doc_id"), lit(8)) === 0)
+    val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val planes = Seq.tabulate(4)(t => Seq.tabulate(4)(j =>
+      Seq.tabulate(64)(i => if (i == 4 * t + j) 1.0 else 0.0)))
+    val mh = DedupIndexStore.appendMinhashSegment(
+      DedupIndexStore.writeMinhashSegmented(dBase), dGen1)
+    val sh = DedupIndexStore.appendSimhashSegment(
+      DedupIndexStore.writeSimhashSegmented(dBase), dGen1)
+    val emb = DedupIndexStore.appendEmbeddingSegment(
+      DedupIndexStore.writeEmbeddingSegmented(
+        embs.filter(pmod(col("vec_id"), lit(4)) =!= 0), planes),
+      embs.filter(pmod(col("vec_id"), lit(8)) === 4), planes)
+    // every banded family's two-segment probe goes through the one
+    // probe-time cap, so each publishes the same three observe nodes
+    // under its own family name
+    val probes: Seq[(String, () => DataFrame)] = Seq(
+      "minhash" -> (() => DedupIndexStore.probeMinhashSeg(spark, mh, dGen2)),
+      "simhash" -> (() => DedupIndexStore.probeSimhashSeg(spark, sh, dGen2)),
+      "embedding" -> (() => DedupIndexStore.probeEmbeddingSeg(spark, emb,
+        embs.filter(pmod(col("vec_id"), lit(8)) === 0), threshold = 0.4,
+        tables = planes)))
+    probes.foreach { case (family, probeOf) =>
+      val probe = probeOf()
+      probe.collect()
+      val pre = probe.queryExecution
+        .observedMetrics(DedupIndexStore.segProbeMetricName(family))
+      val post = probe.queryExecution
+        .observedMetrics(DedupIndexStore.segProbeMetricPostName(family))
+      assert(pre.getAs[Int]("segments_scanned") == 2, family)
+      assert(pre.getAs[Long]("bucket_rows_pre") > 0, family)
+      assert(pre.getAs[Long]("members_pre") >=
+        pre.getAs[Long]("bucket_rows_pre"), family)
+      // under the default (non-binding) cap nothing is pruned: the
+      // candidate leg re-reads exactly the pre-prune rows — the 2x
+      // read amplification a compacted single index would reset
+      assert(post.getAs[Long]("bucket_rows_post")
+        <= pre.getAs[Long]("bucket_rows_pre"), family)
+      assert(post.getAs[Long]("members_post") > 0, family)
+      // a served probe's amplification: at least one stored row per
+      // surviving bucket, at most one per segment
+      val served = probeOf()
+      DedupIndexStore.executeForTelemetry(served)
+      val amp = DedupIndexStore.segProbeReadAmpBp(served, family)
+      assert(amp.exists(a => a >= 10000L && a <= 20000L),
+        s"$family: expected a read amplification in [1.0x, 2.0x], " +
+          s"got $amp")
+    }
   }
 
   test("executeForTelemetry populates the serve's observe metrics " +

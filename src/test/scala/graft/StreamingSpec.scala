@@ -977,4 +977,45 @@ class StreamingSpec extends SparkSpec {
       .select($"decay_e6").as[Long].head()
     assert(bRow == 9765L && bRow != 1250000L)
   }
+
+  test("a drain owns its replay: an in-memory input leaves no replay " +
+      "directory and restores shuffle partitions, on success and when " +
+      "the drain's stream fails") {
+    import org.apache.spark.sql.functions._
+    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def replayDirs(): Set[String] = {
+      val ls = Files.list(tmpRoot)
+      try ls.toArray.map(_.toString).filter(p =>
+        java.nio.file.Paths.get(p).getFileName.toString
+          .startsWith("graft-incr-ingest")).toSet
+      finally ls.close()
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val partitions = spark.conf.get(key)
+    val before = replayDirs()
+    // a LocalRelation has no file identity: the uncached replay path,
+    // whose directory the drain itself must delete
+    val ev = Seq(
+      (1L, "a", "2024-01-10 00:00:00"),
+      (2L, "a", "2024-01-01 00:00:00"),
+      (3L, "b", "2024-01-03 00:00:00"),
+      (4L, "c", "2024-01-05 00:00:00"))
+      .toDF("event_id", "event_type", "ts_s")
+      .select($"event_id", $"event_type", to_timestamp($"ts_s").as("ts"))
+    // drainDecayedCounts runs its stateful stream under the drain's
+    // partition scope and still equals its batch twin
+    val got = EventStreams.drainDecayedCounts(ev, nBatches = 2)
+    assert(sortedRows(got) == sortedRows(EventOps.decayedCounts(ev)))
+    assert(replayDirs() == before)
+    assert(spark.conf.get(key) == partitions)
+    // a null event time replays fine but fails the stream itself: the
+    // stateful fold's (type, day) decoding rejects the null day
+    val bad = ev.unionByName(Seq((5L, "a")).toDF("event_id", "event_type")
+      .select($"event_id", $"event_type", lit(null).cast("timestamp")
+        .as("ts")))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      EventStreams.drainDecayedCounts(bad, nBatches = 2))
+    assert(replayDirs() == before)
+    assert(spark.conf.get(key) == partitions)
+  }
 }
